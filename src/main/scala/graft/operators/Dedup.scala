@@ -155,6 +155,33 @@ object Dedup {
         (col("common") / (col("n_a") + col("n_b") - col("common"))).as("jaccard"))
       .filter(col("jaccard") >= minJaccard)
 
+  /** The per-doc array table [[jaccardPairsPrefix]] pins — exposed
+    * package-private so the plan test can COUNT its exchanges on the
+    * operator's own frame (the pin truncates every downstream explain).
+    * Shingles ride as xxhash64 longs (see [[jaccardPairsPrefix]]).
+    *
+    * ONE pinned per-doc table answers every downstream question: the
+    * df window (the one unavoidable shingle-keyed exchange) feeds a
+    * doc-keyed collect whose array is SORTED BY (df, shingle) — the
+    * same total order the old per-doc rank window sorted the whole
+    * stream by, now an in-memory array_sort per doc (bounded by
+    * shingles/doc, never corpus-sized). Prefixes slice the array,
+    * lengths are its size, and verification intersects the same
+    * arrays — so the old shape's second full-stream sort exchange
+    * (the doc-partitioned rank window), its per-side docSets
+    * collect exchanges, and the lens distinct exchanges all collapse
+    * into this one groupBy. Full-stream exchanges: 3 -> 2.
+    */
+  private[graft] def docsAllPrePin(sh0: DataFrame): DataFrame =
+    sh0.select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
+      .withColumn("__df", count(lit(1)).over(Window.partitionBy("shingle")))
+      .groupBy("doc_id")
+      .agg(sort_array(collect_list(struct(col("__df"), col("shingle"))))
+        .as("__ps"))
+      .select(col("doc_id"),
+        expr("transform(__ps, p -> p.shingle)").as("__shs"),
+        size(col("__ps")).cast(LongType).as("n_sh"))
+
   /** EXACT Jaccard pairs via PPJoin-style prefix filtering (Xiao et
     * al., WWW'08 — public algorithm) — same output as [[jaccardPairs]]
     * (spec-checked identical), tractable where the plain inverted-
@@ -186,26 +213,7 @@ object Dedup {
     // distinct shingles: ~4e-9 at u=1e5/doc-corpus; the property test
     // vs the string-keyed [[jaccardPairs]] enforces identity in
     // practice).
-    val sh = sh0.select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-    // ONE pinned per-doc table answers every downstream question: the
-    // df window (the one unavoidable shingle-keyed exchange) feeds a
-    // doc-keyed collect whose array is SORTED BY (df, shingle) — the
-    // same total order the old per-doc rank window sorted the whole
-    // stream by, now an in-memory array_sort per doc (bounded by
-    // shingles/doc, never corpus-sized). Prefixes slice the array,
-    // lengths are its size, and verification intersects the same
-    // arrays — so the old shape's second full-stream sort exchange
-    // (the doc-partitioned rank window), its per-side docSets
-    // collect exchanges, and the lens distinct exchanges all collapse
-    // into this one groupBy. Full-stream exchanges: 3 -> 2.
-    val docsAll = graft.core.Materialize.pin(
-      sh.withColumn("__df", count(lit(1)).over(Window.partitionBy("shingle")))
-        .groupBy("doc_id")
-        .agg(sort_array(collect_list(struct(col("__df"), col("shingle"))))
-          .as("__ps"))
-        .select(col("doc_id"),
-          expr("transform(__ps, p -> p.shingle)").as("__shs"),
-          size(col("__ps")).cast(LongType).as("n_sh")))
+    val docsAll = graft.core.Materialize.pin(docsAllPrePin(sh0))
     // per-doc prefix length: |d| - ceil(t*|d|) + 1 rarest shingles
     // (identical to the old rank-window filter; greatest(0) guards the
     // t > 1 corner where the old filter selected nothing)

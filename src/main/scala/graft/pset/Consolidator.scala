@@ -1,6 +1,7 @@
 package graft.pset
 
 import graft.core.Ids
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -25,10 +26,13 @@ object Consolidator {
     * (combine_pset_tables.py:214-234).
     */
   def loadTable(spark: SparkSession, dataDir: String, name: String): DataFrame = {
-    val psetDirs = new java.io.File(dataDir).listFiles().toSeq
-      .filter(_.isDirectory)
-    val paths = psetDirs.map(d => s"${d.getAbsolutePath}/${d.getName}_$name.parquet")
-      .filter(p => new java.io.File(p).exists())
+    // listed through Hadoop FileSystem, so dataDir may be any URI
+    // (file:, hdfs:, s3a:) the session can write to
+    val root = new Path(dataDir)
+    val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
+    val paths = fs.listStatus(root).toSeq.filter(_.isDirectory)
+      .map(d => new Path(d.getPath, s"${d.getPath.getName}_$name.parquet"))
+      .filter(fs.exists).map(_.toString)
     require(paths.nonEmpty, s"no per-PSet tables named $name under $dataDir")
     paths.map(spark.read.parquet(_))
       .reduce(_.unionByName(_, allowMissingColumns = true))
@@ -59,13 +63,23 @@ object Consolidator {
       .withColumnRenamed("__id", joinCol)
   }
 
-  /** Sort + dense id + parquet sink (combine_pset_tables.py:334-349). */
+  /** Write `df` as parquet at `path` and return the written table read
+    * back with the schema known from the write, so the read runs no
+    * footer-inference job. The file reader makes every field nullable,
+    * which is exactly what inference returns, so the frame equals a
+    * bare `spark.read.parquet(path)`. */
+  def writeRead(df: DataFrame, path: String): DataFrame = {
+    df.write.mode("overwrite").parquet(path)
+    df.sparkSession.read.schema(df.schema).parquet(path)
+  }
+
+  /** Sort + dense id + parquet sink (combine_pset_tables.py:334-349);
+    * returns the written table ([[writeRead]]). */
   def writeTable(df: DataFrame, name: String, outDir: String,
       addIndex: Boolean = true, sortCols: Seq[Column] = Nil): DataFrame = {
     val sorted = if (sortCols.nonEmpty) df.orderBy(sortCols: _*) else df
-    val out = if (addIndex) Ids.denseId(sorted, sortCols) else sorted
-    out.write.mode("overwrite").parquet(s"$outDir/$name.parquet")
-    out
+    writeRead(if (addIndex) Ids.denseId(sorted, sortCols) else sorted,
+      s"$outDir/$name.parquet")
   }
 
   /** Full consolidation. `compoundMeta` carries (name, compound_uid)
@@ -76,26 +90,27 @@ object Consolidator {
       compoundMeta: DataFrame,
       audit: (String, DataFrame) => Unit = (_, _) => ()): Map[String, DataFrame] = {
 
-    def reread(name: String): DataFrame =
-      spark.read.parquet(s"$outDir/$name.parquet")
+    // every written table, read back as written — the returned map
+    var out = Map.empty[String, DataFrame]
+    def write(name: String, df: DataFrame, addIndex: Boolean = true,
+        sortCols: Seq[Column] = Nil): DataFrame = {
+      val written = writeTable(df, name, outDir, addIndex, sortCols)
+      out += name -> written
+      written
+    }
 
     // --- primary (combine_pset_tables.py:51-89)
-    writeTable(loadTable(spark, dataDir, "tissue"), "tissue", outDir,
-      sortCols = Seq(col("name").asc_nulls_last))
-    writeTable(loadTable(spark, dataDir, "gene"), "gene", outDir,
-      sortCols = Seq(col("name")))
-    writeTable(loadTable(spark, dataDir, "dataset"), "dataset", outDir,
-      sortCols = Seq(col("name")))
-    writeTable(
+    val tissue = renameAndKey(write("tissue", loadTable(spark, dataDir, "tissue"),
+      sortCols = Seq(col("name").asc_nulls_last)), "tissue_id")
+    val gene = renameAndKey(write("gene", loadTable(spark, dataDir, "gene"),
+      sortCols = Seq(col("name"))), "gene_id")
+    val dataset = renameAndKey(write("dataset", loadTable(spark, dataDir, "dataset"),
+      sortCols = Seq(col("name"))), "dataset_id")
+    val compound = renameAndKey(write("compound",
       loadTable(spark, dataDir, "compound")
         .join(broadcast(compoundMeta.select(col("name"), col("compound_uid"))),
           Seq("name"), "left"),
-      "compound", outDir, sortCols = Seq(col("name")))
-
-    val tissue = renameAndKey(reread("tissue"), "tissue_id")
-    val gene = renameAndKey(reread("gene"), "gene_id")
-    val dataset = renameAndKey(reread("dataset"), "dataset_id")
-    val compound = renameAndKey(reread("compound"), "compound_id")
+      sortCols = Seq(col("name"))), "compound_id")
     var dims = Map("tissue" -> tissue, "gene" -> gene,
       "dataset" -> dataset, "compound" -> compound)
 
@@ -103,20 +118,16 @@ object Consolidator {
       val mapped = fks.foldLeft(loadTable(spark, dataDir, name)) { (df, fk) =>
         joinTables(df, dims(fk), s"${fk}_id", onUnmatched = audit(s"$name.$fk", _))
       }
-      val sortCols = fks.map(fk => col(s"${fk}_id"))
-      writeTable(mapped, name, outDir, addIndex, sortCols)
-      reread(name)
+      write(name, mapped, addIndex, fks.map(fk => col(s"${fk}_id")))
     }
 
     // --- secondary (combine_pset_tables.py:93-143)
     // cell natural keys arrive as (name, tissue_id-as-name); map tissue
     // then register the cell dim.
-    val cellTable = {
-      val df = joinTables(loadTable(spark, dataDir, "cell"), tissue, "tissue_id",
-        onUnmatched = audit("cell.tissue", _))
-      writeTable(df, "cell", outDir, addIndex = true, Seq(col("tissue_id"), col("name")))
-      reread("cell")
-    }
+    val cellTable = write("cell",
+      joinTables(loadTable(spark, dataDir, "cell"), tissue, "tissue_id",
+        onUnmatched = audit("cell.tissue", _)),
+      sortCols = Seq(col("tissue_id"), col("name")))
     dims += "cell" -> renameAndKey(cellTable, "cell_id")
 
     loadJoinWrite("compound_annotation", Seq("compound"), addIndex = false)
@@ -131,7 +142,7 @@ object Consolidator {
       .withColumnRenamed("gene_id", "name")
       .withColumnRenamed("id", "gene_id")
       .drop("name")
-    writeTable(geneAnnot, "gene_annotation", outDir, addIndex = false)
+    write("gene_annotation", geneAnnot, addIndex = false)
 
     loadJoinWrite("dataset_cell", Seq("dataset", "cell"), addIndex = false)
     loadJoinWrite("dataset_tissue", Seq("dataset", "tissue"), addIndex = false)
@@ -147,8 +158,9 @@ object Consolidator {
       }
     val expSort = Seq("cell_id", "compound_id", "dataset_id", "tissue_id").map(col)
     val expWithId = Ids.denseId(expMapped.orderBy(expSort: _*), expSort)
-    expWithId.select("id", "cell_id", "compound_id", "dataset_id", "tissue_id")
-      .write.mode("overwrite").parquet(s"$outDir/experiment.parquet")
+    write("experiment",
+      expWithId.select("id", "cell_id", "compound_id", "dataset_id", "tissue_id"),
+      addIndex = false)
 
     // experiment dim keyed on (dataset_id, experiment_id)
     val expDim = expWithId.select(col("id"),
@@ -163,13 +175,8 @@ object Consolidator {
       df = joinTables(df, expDim, "experiment_id", extraKeys = Seq("dataset_id"),
         onUnmatched = audit(s"$name.experiment", _))
       df = df.drop("dataset_id")
-      writeTable(df, name, outDir, addIndex = name == "dose_response",
-        Seq(col("experiment_id")))
+      write(name, df, addIndex = name == "dose_response", Seq(col("experiment_id")))
     }
-
-    Seq("tissue", "gene", "dataset", "compound", "cell", "compound_annotation",
-      "gene_annotation", "dataset_cell", "dataset_tissue", "dataset_compound",
-      "mol_cell", "dataset_statistics", "experiment", "dose_response", "profile")
-      .map(n => n -> reread(n)).toMap
+    out
   }
 }

@@ -1,5 +1,6 @@
 package graft.pset
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -32,15 +33,18 @@ object PSetReader {
     seg.replaceAll(".*@|\\.csv\\.gz$|\\.csv$|\\.parquet$|\\.txt$", "")
 
   def read(spark: SparkSession, fileRoot: String, name: String): PSet = {
-    val dir = new java.io.File(s"$fileRoot/${name}_PSet")
-    if (!dir.isDirectory)
+    // listed through Hadoop FileSystem, so fileRoot may be any URI
+    // (file:, hdfs:, s3a:) the session can read
+    val dir = new Path(s"$fileRoot/${name}_PSet")
+    val fs = dir.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(dir) || !fs.getFileStatus(dir).isDirectory)
       throw new IllegalArgumentException(
         s"No PSet directory named $name could be found in $fileRoot")
-    val files = dir.listFiles().toSeq
-      .filter(f => f.isFile && !f.getName.startsWith("."))
+    val files = fs.listStatus(dir).toSeq
+      .filter(f => f.isFile && !f.getPath.getName.startsWith("."))
     val tables = files.map { f =>
-      val segs = f.getName.split("\\$").toSeq.map(cleanSegment)
-      val df = readFile(spark, f.getAbsolutePath)
+      val segs = f.getPath.getName.split("\\$").toSeq.map(cleanSegment)
+      val df = readFile(spark, f.getPath.toString)
       segs -> df
     }.toMap
     PSet(name, tables)

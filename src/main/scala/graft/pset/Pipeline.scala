@@ -94,10 +94,8 @@ object Pipeline {
       compoundMeta, audit)
 
     // Phase 3: synonyms (E3) — driven by configured curation metadata
-    def writeFinal(name: String, df: DataFrame): Unit = {
-      df.write.mode("overwrite").parquet(s"${cfg.finalDir}/$name.parquet")
-      tables += name -> spark.read.parquet(s"${cfg.finalDir}/$name.parquet")
-    }
+    def writeFinal(name: String, df: DataFrame): Unit =
+      tables += name -> Consolidator.writeRead(df, s"${cfg.finalDir}/$name.parquet")
     cfg.cellSynonymMeta.foreach { meta =>
       writeFinal("cell_synonym", SynonymBuilders.buildCellSynonyms(
         meta, tables("cell"), tables("dataset"), cfg.psetNames))
@@ -143,11 +141,9 @@ object Pipeline {
       // staged through workDir: gene_annotation.parquet cannot be
       // overwritten while the enrichment plan still reads it lazily
       val before = tables("gene_annotation").count()
-      val staged = s"${cfg.workDir}/gene_annotation_enriched.parquet"
-      MetaBuilders.mapGenomicCoordinates(
-          tables("gene_annotation"), tables("gene"), gc)
-        .write.mode("overwrite").parquet(staged)
-      val enriched = spark.read.parquet(staged)
+      val enriched = Consolidator.writeRead(MetaBuilders.mapGenomicCoordinates(
+          tables("gene_annotation"), tables("gene"), gc),
+        s"${cfg.workDir}/gene_annotation_enriched.parquet")
       // reference raises if the join mangles rows
       // (map_genes_to_genomic_coordinates.py:60-64)
       require(enriched.count() == before,

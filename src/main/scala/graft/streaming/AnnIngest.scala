@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Similarity
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -72,22 +73,11 @@ object AnnIngest {
         ingestBatch(batch, batchId, path))
       .start()
 
-  private val BatchDir = "batch_id=(\\d+)".r
-  private val GenDir = "gen=(\\d+)".r
-
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def numberedDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      pat: scala.util.matching.Regex): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.flatMap { s =>
-      s.getPath.getName match {
-        case pat(id) if s.isDirectory => Some(id.toLong -> s.getPath)
-        case _                        => None
-      }
-    }
+  private val layout = GenForest.Layout("AnnIngest",
+    hot = Seq("vecs"), hotSchema = StoreSchemas.vecsBatch,
+    forest = "index", forestSchema = StoreSchemas.codesForest,
+    partitionCol = "cell", idCol = "vec_id", modStamp = None,
+    srcGens = true, rowTombstones = false, place = (df, _) => df)
 
   /** Permanent takedown of vec_ids (deletion requests, right-to-be-
     * forgotten): tombstones land in `indexPath/tombstones/batch_id=`
@@ -114,17 +104,11 @@ object AnnIngest {
     TombstoneStore.writeGuarded(ids.select(col("vec_id")), batchId,
       indexPath, maxWaitMs)
 
-  private def tombstones(spark: SparkSession,
-      indexPath: String): Option[DataFrame] =
-    TombstoneStore.read(spark, indexPath, "vec_id")
-
   /** The index's stamped consolidation watermark: every store batch
     * with `batch_id <= through` is already encoded into the forest.
     * None = no consolidation has completed at this path yet. */
-  def consolidatedThrough(spark: SparkSession, indexPath: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_through")
-    graft.core.Markers.read(fsOf(spark, p), p).map(_.toLong)
-  }
+  def consolidatedThrough(spark: SparkSession, indexPath: String): Option[Long] =
+    GenForest.consolidatedThrough(spark, indexPath)
 
   /** Load the frozen quantizer (coarse centroids + PQ codebooks). */
   def loadQuantizer(spark: SparkSession,
@@ -173,201 +157,78 @@ object AnnIngest {
       pqIters: Int = 3, dim: Int = Similarity.PlaneDims,
       trainCap: Option[Int] = None): Unit = {
     import spark.implicits._
-    val idx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val batches = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(s"$path/vecs"), BatchDir)
-    if (batches.isEmpty) return
-    val through = batches.map(_._1).max
-    val prev = consolidatedThrough(spark, indexPath).getOrElse(-1L)
-    if (through <= prev) return
-    val genRoot = new org.apache.hadoop.fs.Path(idx, "index")
-    // a crashed rebase may hold the REAL forest in its recovery dirs;
-    // consolidating on top of the partial view would strand that data
-    require(!fs.exists(new org.apache.hadoop.fs.Path(idx, ".rebase-scratch-index"))
-        && !fs.exists(new org.apache.hadoop.fs.Path(idx, ".rebase-old-index")),
-      s"index at $indexPath has rebase recovery state pending — run " +
-        "AnnIngest.rebase to settle it before consolidating")
-    GenForest.requireNoLegacyRecoveryDirs(fs, idx)
-    // floor guard: a run that crashed after its gen rename but before
-    // the watermark write leaves maxGen > watermark; folding from the
-    // watermark again would duplicate every vector that gen covers
-    val maxGen = numberedDirs(fs, genRoot, GenDir)
-      .map(_._1).maxOption.getOrElse(-1L)
-    val floor = math.max(prev, maxGen)
-    val newBatches = batches.filter(_._1 > floor).sortBy(_._1)
-
-    val runId = java.util.UUID.randomUUID().toString
-    val claim = new org.apache.hadoop.fs.Path(idx, "_consolidate_commit")
-    if (!graft.core.Markers.tryCreate(fs, claim, s"$runId\n$through"))
-      throw new IllegalStateException(
-        s"index $indexPath already has a consolidation in flight (or a " +
-          "dead one's marker) — if no consolidator is live, delete " +
-          s"$claim and re-run (every phase is idempotent)")
-    try {
-      fs.mkdirs(idx)
-      // QUANTIZER: train-once-then-frozen. Trains on the union of ALL
-      // store batches visible now (not just the new ones) — the first
-      // consolidation is the one chance to see the widest corpus.
-      val quant = new org.apache.hadoop.fs.Path(idx, "quantizer")
-      if (!fs.exists(quant)) {
-        val all = spark.read.option("basePath", s"$path/vecs")
-          .schema(StoreSchemas.vecsBatch)
-          .parquet(batches.map(_._2.toString): _*)
-          .select(col("vec_id"), col("embedding"))
-        val train = trainCap match {
-          case Some(cap) => all
-            .withColumn("__h", xxhash64(col("vec_id")))
-            .orderBy("__h").limit(cap).drop("__h")
-          case None => all
+    GenForest.consolidate(spark, path, indexPath, layout,
+      underLease = (fs, idx, batches) => {
+        // QUANTIZER: train-once-then-frozen. Trains on the union of ALL
+        // store batches visible now (not just the new ones) — the first
+        // consolidation is the one chance to see the widest corpus.
+        val quant = new Path(idx, "quantizer")
+        if (!fs.exists(quant)) {
+          val all = GenForest.readHot(spark, path, layout, batches)
+          val train = trainCap match {
+            case Some(cap) => all
+              .withColumn("__h", xxhash64(col("vec_id")))
+              .orderBy("__h").limit(cap).drop("__h")
+            case None => all
+          }
+          val pinned = graft.core.Materialize.pin(train)
+          // capped sample → hash seeding (the sample may hold none of
+          // the low vec_ids the default seed rule needs); uncapped keeps
+          // the one-shot build's seed rule so the spec's grown-vs-one-
+          // shot equality compares identically-trained quantizers
+          val (assigned, centroids) =
+            Similarity.ivfIndexWithCentroids(pinned, nCentroids, ivfIters,
+              seedByHash = trainCap.isDefined)
+          val resid = graft.core.Materialize.pin(
+            Similarity.residualFrame(pinned, assigned, centroids))
+          val books = Similarity.pqCodebooks(resid, m, ksub, pqIters, dim)
+          val scratch = new Path(idx, ".quantizer-scratch")
+          if (fs.exists(scratch)) fs.delete(scratch, true)
+          centroids.toDF("cell", "centroid")
+            .write.mode("errorifexists")
+            .parquet(new Path(scratch, "centroids").toString)
+          books.zipWithIndex.flatMap { case (bk, j) =>
+            bk.zipWithIndex.map { case (cw, c) => (j, c, cw) }
+          }.toDF("sub_j", "cell", "codeword")
+            .write.mode("errorifexists")
+            .parquet(new Path(scratch, "codebooks").toString)
+          // the stamp records the training REQUEST, not the product —
+          // k-means can legitimately produce fewer cells than asked
+          // (the seed set is corpus-dependent), and the check below must
+          // not reject a store whose first batch trained thin
+          graft.core.Markers.forceWrite(fs,
+            new Path(scratch, "_shape"), s"$nCentroids $m")
+          require(fs.rename(scratch, quant),
+            s"failed to install quantizer at $quant")
         }
-        val pinned = graft.core.Materialize.pin(train)
-        // capped sample → hash seeding (the sample may hold none of
-        // the low vec_ids the default seed rule needs); uncapped keeps
-        // the one-shot build's seed rule so the spec's grown-vs-one-
-        // shot equality compares identically-trained quantizers
-        val (assigned, centroids) =
-          Similarity.ivfIndexWithCentroids(pinned, nCentroids, ivfIters,
-            seedByHash = trainCap.isDefined)
-        val resid = graft.core.Materialize.pin(
-          Similarity.residualFrame(pinned, assigned, centroids))
-        val books = Similarity.pqCodebooks(resid, m, ksub, pqIters, dim)
-        val scratch = new org.apache.hadoop.fs.Path(idx, ".quantizer-scratch")
-        if (fs.exists(scratch)) fs.delete(scratch, true)
-        centroids.toDF("cell", "centroid")
-          .write.mode("errorifexists")
-          .parquet(new org.apache.hadoop.fs.Path(scratch, "centroids").toString)
-        books.zipWithIndex.flatMap { case (bk, j) =>
-          bk.zipWithIndex.map { case (cw, c) => (j, c, cw) }
-        }.toDF("sub_j", "cell", "codeword")
-          .write.mode("errorifexists")
-          .parquet(new org.apache.hadoop.fs.Path(scratch, "codebooks").toString)
-        // the stamp records the training REQUEST, not the product —
-        // k-means can legitimately produce fewer cells than asked
-        // (the seed set is corpus-dependent), and the check below must
-        // not reject a store whose first batch trained thin
-        graft.core.Markers.forceWrite(fs,
-          new org.apache.hadoop.fs.Path(scratch, "_shape"), s"$nCentroids $m")
-        require(fs.rename(scratch, quant),
-          s"failed to install quantizer at $quant")
-      }
-      val shape = graft.core.Markers.read(fs,
-        new org.apache.hadoop.fs.Path(quant, "_shape")).get.split(" ")
-      require(shape(0).toInt == nCentroids && shape(1).toInt == m,
-        s"index at $indexPath has a frozen quantizer trained at " +
-          s"${shape(0)} cells x ${shape(1)} subspaces; an " +
-          s"incremental run cannot switch to $nCentroids x $m — " +
-          "rebuild the index to retrain, or pass the frozen shape")
-      val (centroids, books) = loadQuantizer(spark, indexPath)
-      // ENCODE the new batches against the frozen quantizer — reads
-      // EXACTLY the new batch dirs, lands via scratch + rename so
-      // readers never see a half-written generation.
-      val genDir = new org.apache.hadoop.fs.Path(idx, s"index/gen=$through")
-      if (newBatches.nonEmpty && !fs.exists(genDir)) {
-        val vecs = spark.read.option("basePath", s"$path/vecs")
-          .schema(StoreSchemas.vecsBatch)
-          .parquet(newBatches.map(_._2.toString): _*)
-          .select(col("vec_id"), col("embedding"))
-        val alive = tombstones(spark, indexPath) match {
-          case Some(t) => vecs.join(broadcast(t), Seq("vec_id"), "left_anti")
-          case None    => vecs
-        }
+        val shape = graft.core.Markers.read(fs,
+          new Path(quant, "_shape")).get.split(" ")
+        require(shape(0).toInt == nCentroids && shape(1).toInt == m,
+          s"index at $indexPath has a frozen quantizer trained at " +
+            s"${shape(0)} cells x ${shape(1)} subspaces; an " +
+            s"incremental run cannot switch to $nCentroids x $m — " +
+            "rebuild the index to retrain, or pass the frozen shape")
+      },
+      // ENCODE the new (tombstone-filtered) vectors against the frozen
+      // quantizer
+      encode = alive => {
+        val (centroids, books) = loadQuantizer(spark, indexPath)
         val pinnedNew = graft.core.Materialize.pin(alive)
         val assigned = Similarity.assignCells(
           pinnedNew.select(col("vec_id"), col("embedding")), centroids)
         val resid = Similarity.residualFrame(pinnedNew, assigned, centroids)
-        val scratch = new org.apache.hadoop.fs.Path(idx, ".index-scratch")
-        if (fs.exists(scratch)) fs.delete(scratch, true)
-        Similarity.pqEncode(resid, books)
-          .join(assigned, Seq("vec_id"))
-          // row-level source identity: survives rebase folds so as-of
-          // reads older than a fold point still serve exactly
-          .withColumn("src_gen", lit(through))
-          .write.mode("errorifexists").partitionBy("cell")
-          .parquet(scratch.toString)
-        // the tombstone skip can empty a NONEMPTY batch — an
-        // all-marker gen dir must not be installed
-        if (!GenForest.hasDataFiles(fs, scratch)) fs.delete(scratch, true)
-        else {
-          // cutoff = the tombstone watermark this gen's rows REFLECT.
-          // The dir-listing max alone understates it once maintain has
-          // folded purged batches into one low-id segment — the purge
-          // stamp restores the true floor (everything at or below it
-          // was certainly anti-joined here, its rows are already gone
-          // from the corpus this encode reads)
-          GenForest.writeGensMarker(fs, scratch, Map(through -> math.max(
-            numberedDirs(fs, new org.apache.hadoop.fs.Path(idx, "tombstones"),
-              BatchDir).map(_._1).maxOption.getOrElse(-1L),
-            graft.core.Markers.read(fs,
-              new org.apache.hadoop.fs.Path(idx, "_purged"))
-              .map(_.toLong).getOrElse(-1L))))
-          fs.mkdirs(genRoot)
-          require(fs.rename(scratch, genDir),
-            s"failed to install consolidated generation at $genDir")
-        }
-      }
-      fs.mkdirs(genRoot)
-      // WATERMARK last — the run's single durable commit point
-      graft.core.Markers.forceWrite(fs,
-        new org.apache.hadoop.fs.Path(idx, "_through"), through.toString)
-    } finally {
-      // phases are individually idempotent, so the lease can always be
-      // released: a failed run is finished by calling consolidate again
-      fs.delete(claim, false)
-    }
+        Similarity.pqEncode(resid, books).join(assigned, Seq("vec_id"))
+      })
   }
 
   /** Major compaction: fold every generation into one base gen (codes
     * move, nothing is re-encoded — the quantizer is frozen, so a
-    * layout fold can never change a single code byte). Same claim and
-    * two-way crash recovery as [[PostingsIngest.rebase]], via the
-    * shared [[GenForest]] skeleton. */
-  def rebase(spark: SparkSession, indexPath: String): Unit = {
-    val wm = consolidatedThrough(spark, indexPath).getOrElse(
-      throw new IllegalStateException(
-        s"index at $indexPath has no consolidation watermark — nothing to rebase"))
-    // the fold is where tombstoned rows leave the disk: the serve path
-    // already hides them, so the purge is pure space/scan reclamation
-    val idx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val tombs = tombstones(spark, indexPath)
-    // a purge is a LOSSY fold, so it must run even on a single-gen
-    // forest — but only while tombstone batches newer than the purge
-    // stamp exist, or every later rebase would re-fold the whole
-    // forest forever against a permanent (never-shrinking) set
-    val (maxTomb, unpurged) = tombstoneState(fs, idx)
-    GenForest.rebase(spark, indexPath, forestName = "index", wm = wm,
-      partitionCols = Seq("cell"), forceFold = unpurged,
-      foldCutoff = if (unpurged) maxTomb else None,
-      schema = Some(StoreSchemas.codesForest)) { forest =>
-      val base = forest.drop("gen") // src_gen (data column) rides through
-      tombs match {
-        case Some(t) => base.join(broadcast(t), Seq("vec_id"), "left_anti")
-        case None    => base
-      }
-    }
-    // stamp AFTER the fold lands (crash in between re-folds on retry,
-    // never the reverse), with the PRE-fold listing's max — see
-    // tombstoneState on why re-listing here would lose a concurrent
-    // tombstone batch
-    maxTomb.foreach(m => graft.core.Markers.forceWrite(fs,
-      new org.apache.hadoop.fs.Path(idx, "_purged"), m.toString))
-  }
-
-  /** (max tombstone batch id on disk, whether any of them postdate
-    * the purge stamp). The max is captured in the SAME listing the
-    * decision uses: a rebase must stamp exactly what it saw before
-    * folding — re-listing after the fold would mark a concurrently
-    * landed tombstone batch purged without it ever being folded. */
-  private def tombstoneState(fs: org.apache.hadoop.fs.FileSystem,
-      idx: org.apache.hadoop.fs.Path): (Option[Long], Boolean) = {
-    val maxBatch = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(idx, "tombstones"), BatchDir)
-      .map(_._1).maxOption
-    val purged = graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_purged")).map(_.toLong).getOrElse(-1L)
-    (maxBatch, maxBatch.exists(_ > purged))
-  }
+    * layout fold can never change a single code byte), via the shared
+    * [[GenForest.purge]] lifecycle. The fold is where tombstoned rows
+    * leave the disk: the serve path already hides them, so the purge
+    * is pure space/scan reclamation. */
+  def rebase(spark: SparkSession, indexPath: String): Unit =
+    GenForest.purge(spark, indexPath, layout)
 
   /** One-call maintenance runbook (the [[VecIngest.maintainStores]]
     * shape for this store): consolidate whatever is new, rebase when
@@ -385,45 +246,10 @@ object AnnIngest {
     * commit regardless, only physical-deletion latency grows
     * (bounded by k cycles; post-maintain tombstone dirs <= 2k-1). */
   def maintain(spark: SparkSession, path: String, indexPath: String,
-      rebaseAtGens: Int = 8, purgeAtBatches: Int = 1): Unit = {
-    require(purgeAtBatches >= 1,
-      s"purgeAtBatches must be >= 1, got $purgeAtBatches")
-    consolidate(spark, path, indexPath)
-    val idx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val gens = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(idx, "index"), GenDir).size
-    val purged = graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_purged")).map(_.toLong)
-      .getOrElse(-1L)
-    val unpurged = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(idx, "tombstones"), BatchDir)
-      .map(_._1).count(_ > purged)
-    if (gens > rebaseAtGens || unpurged >= purgeAtBatches)
-      rebase(spark, indexPath)
-    consolidatedThrough(spark, indexPath).foreach { wm =>
-      // tiered: the blind-timer amortization rationale at
-      // [[PostingsIngest.maintain]]
-      Compaction.compactTiered(spark, s"$path/vecs", safeBelow = wm + 1)
-    }
-    // TOMBSTONE-DIR bound (r18): the takedown forest grows one
-    // `batch_id=` dir per request batch FOREVER — after the
-    // rebaseAtGens fold and the hot-store compact above, the only
-    // unbounded listing bill left in this layout (the quantizer is one
-    // frozen artifact and there are no per-gen sidecars to bound; the
-    // serve/encode/purge paths all read tombstones as a SET). Batches
-    // at or below the purge stamp fold into the out-of-namespace
-    // [[TombstoneStore]] snapshot — NOT via Compaction.compact, whose
-    // collapsed segment a replayed tombstone write could dynamic-
-    // overwrite, silently shrinking the permanent set. (The postings
-    // store, whose serve-time corrections read batch ids as DATA,
-    // bounds its forest with the row-preserving foldRows variant —
-    // r19, [[PostingsIngest.maintain]].)
-    graft.core.Markers.read(fs, new org.apache.hadoop.fs.Path(idx, "_purged"))
-      .map(_.toLong).foreach { purged =>
-        TombstoneStore.fold(spark, indexPath, purged, "vec_id")
-      }
-  }
+      rebaseAtGens: Int = 8, purgeAtBatches: Int = 1): Unit =
+    GenForest.maintain(spark, path, indexPath, layout, rebaseAtGens,
+      purgeAtBatches, () => consolidate(spark, path, indexPath),
+      () => rebase(spark, indexPath))
 
   /** ANN search against everything consolidated so far: frozen
     * quantizer loaded (driver-sized by contract), coarse probe run
@@ -448,18 +274,10 @@ object AnnIngest {
     val (centroids, books) = loadQuantizer(spark, indexPath)
     val probesLocal = Similarity.coarseProbeLocal(emb, centroids, nQueries, nProbe)
     val cellNames = probesLocal.map(_._3).distinct.map(c => s"cell=$c").toSet
-    val rootPath = new org.apache.hadoop.fs.Path(s"$indexPath/index")
-    val fs = fsOf(spark, rootPath)
-    val leafDirs: Seq[String] =
-      if (!fs.exists(rootPath)) Seq.empty
-      else numberedDirs(fs, rootPath, GenDir)
-        .filter { case (g, gp) => asOfGen.forall(a =>
-          GenForest.readGensMarker(fs, gp, g).keys.exists(_ <= a)) }
-        .flatMap { case (_, gp) =>
-          fs.listStatus(gp).toSeq
-            .map(_.getPath.getName).filter(cellNames.contains)
-            .map(cell => s"$indexPath/index/${gp.getName}/$cell")
-        }
+    val fs = GenForest.fsOf(spark, new Path(indexPath))
+    val leafDirs = GenForest.leafDirs(fs, indexPath, "index", cellNames,
+      (g, gp) => asOfGen.forall(a =>
+        GenForest.readGensMarker(fs, gp, g).keys.exists(_ <= a)))
     if (leafDirs.isEmpty)
       return Seq.empty[(Long, Long, Int)]
         .toDF("query_id", "neighbor_id", "rank")
@@ -470,10 +288,8 @@ object AnnIngest {
       .select(col("vec_id"), col("cell"), col("codes"))
     // takedowns are hidden at serve time, even under asOfGen — a
     // snapshot read must not resurrect a deleted vector
-    val index = tombstones(spark, indexPath) match {
-      case Some(t) => scanned.join(broadcast(t), Seq("vec_id"), "left_anti")
-      case None    => scanned
-    }
+    val index = GenForest.hide(scanned,
+      GenForest.tombstones(spark, indexPath, layout), "vec_id")
     Similarity.ivfPqScoreProbed(index, probesLocal, centroids, books, k)
   }
 

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import graft.operators.Dedup
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
@@ -82,22 +83,18 @@ object DedupIngest {
         ingestBatch(batch, batchId, path))
       .start()
 
-  private val BatchDir = "batch_id=(\\d+)".r
-  private val GenDir = "gen=(\\d+)".r
-
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def numberedDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      pat: scala.util.matching.Regex): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.flatMap { s =>
-      s.getPath.getName match {
-        case pat(id) if s.isDirectory => Some(id.toLong -> s.getPath)
-        case _                        => None
-      }
-    }
+  private val layout = GenForest.Layout("DedupIngest",
+    hot = Seq("bands"), hotSchema = StoreSchemas.bandsBatch,
+    forest = "bands", forestSchema = StoreSchemas.bandsForest,
+    partitionCol = "pbh", idCol = "doc_id", modStamp = Some("_pbh_mod"),
+    srcGens = false, rowTombstones = false,
+    // repartition by the partition key first: ONE file per pbh dir
+    // instead of one per (dir x shuffle partition). Band rows are 20
+    // bytes — without this, mod 1024 writes ~32k near-empty files per
+    // gen (measured: the fold alone cost 56.0 s at 8M band rows; 4.8 s
+    // after — the soak dedupconsol leg)
+    place = (df, mod) =>
+      df.withColumn("pbh", pbhCol(mod)).repartition(col("pbh")))
 
   private def pbhCol(mod: Int) =
     pmod(xxhash64(col("band"), col("bh")), lit(mod.toLong)).cast("int")
@@ -132,153 +129,35 @@ object DedupIngest {
     TombstoneStore.writeGuarded(ids.select(col("doc_id")), batchId,
       indexPath, maxWaitMs)
 
-  private def tombstones(spark: SparkSession,
-      indexPath: String): Option[DataFrame] =
-    TombstoneStore.read(spark, indexPath, "doc_id")
-
-  private def tombstoneState(fs: org.apache.hadoop.fs.FileSystem,
-      idx: org.apache.hadoop.fs.Path): (Option[Long], Boolean) = {
-    val maxBatch = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(idx, "tombstones"), BatchDir)
-      .map(_._1).maxOption
-    val purged = graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_purged")).map(_.toLong).getOrElse(-1L)
-    (maxBatch, maxBatch.exists(_ > purged))
-  }
-
   /** The index's stamped consolidation watermark: every store batch
     * with `batch_id <= through` is already folded into the forest. */
-  def consolidatedThrough(spark: SparkSession, indexPath: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_through")
-    graft.core.Markers.read(fsOf(spark, p), p).map(_.toLong)
-  }
+  def consolidatedThrough(spark: SparkSession, indexPath: String): Option[Long] =
+    GenForest.consolidatedThrough(spark, indexPath)
+
+  /** Forest size stamp: the probe's flat-vs-pruned decision input (one
+    * recursive listing, priced at maintenance, never at probe). */
+  private def stampBytes(fs: FileSystem, idx: Path): Unit =
+    graft.core.Markers.forceWrite(fs, new Path(idx, "_bytes"),
+      fs.getContentSummary(new Path(idx, "bands")).getLength.toString)
 
   /** Offline maintenance, INCREMENTAL: fold only store batches newer
     * than the stamped watermark into one new `gen=` generation of the
-    * pbh-partitioned band forest. Same claim / floor-guard /
-    * scratch+rename / watermark-last discipline as
-    * [[PostingsIngest.consolidate]] — no dictionary and no stats here
-    * (bands carry no corpus-level statistics), so the phase list is
-    * shorter: gen build, watermark. */
+    * pbh-partitioned band forest, through the shared
+    * [[GenForest.consolidate]] lifecycle — no dictionary and no stats
+    * here (bands carry no corpus-level statistics), so the phase list
+    * is shorter: gen build, size stamp, watermark. */
   def consolidate(spark: SparkSession, path: String, indexPath: String,
-      pbhMod: Int = 64): Unit = {
-    import spark.implicits._
-    val idx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val batches = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(s"$path/bands"), BatchDir)
-    if (batches.isEmpty) return
-    val through = batches.map(_._1).max
-    val prev = consolidatedThrough(spark, indexPath).getOrElse(-1L)
-    if (through <= prev) return
-    val genRoot = new org.apache.hadoop.fs.Path(idx, "bands")
-    require(!fs.exists(new org.apache.hadoop.fs.Path(idx, ".rebase-scratch-bands"))
-        && !fs.exists(new org.apache.hadoop.fs.Path(idx, ".rebase-old-bands")),
-      s"index at $indexPath has rebase recovery state pending — run " +
-        "DedupIngest.rebase to settle it before consolidating")
-    GenForest.requireNoLegacyRecoveryDirs(fs, idx)
-    val maxGen = numberedDirs(fs, genRoot, GenDir)
-      .map(_._1).maxOption.getOrElse(-1L)
-    val floor = math.max(prev, maxGen)
-    val newBatches = batches.filter(_._1 > floor).sortBy(_._1)
+      pbhMod: Int = 64): Unit =
+    GenForest.consolidate(spark, path, indexPath, layout, pbhMod,
+      beforeWatermark = stampBytes)
 
-    fs.mkdirs(idx)
-    val modMarker = new org.apache.hadoop.fs.Path(idx, "_pbh_mod")
-    if (!graft.core.Markers.tryCreate(fs, modMarker, pbhMod.toString)) {
-      val stamped = graft.core.Markers.read(fs, modMarker).get.toInt
-      require(stamped == pbhMod,
-        s"index at $indexPath was built with pbh_mod=$stamped; an " +
-          s"incremental run cannot switch to $pbhMod — rebuild the index")
-    }
-    val runId = java.util.UUID.randomUUID().toString
-    val claim = new org.apache.hadoop.fs.Path(idx, "_consolidate_commit")
-    if (!graft.core.Markers.tryCreate(fs, claim, s"$runId\n$through"))
-      throw new IllegalStateException(
-        s"index $indexPath already has a consolidation in flight (or a " +
-          "dead one's marker) — if no consolidator is live, delete " +
-          s"$claim and re-run (every phase is idempotent)")
-    try {
-      val genDir = new org.apache.hadoop.fs.Path(idx, s"bands/gen=$through")
-      if (newBatches.nonEmpty && !fs.exists(genDir)) {
-        val bands = spark.read.option("basePath", s"$path/bands")
-          .schema(StoreSchemas.bandsBatch)
-          .parquet(newBatches.map(_._2.toString): _*)
-          .select("doc_id", "band", "bh")
-        val alive = tombstones(spark, indexPath) match {
-          case Some(t) => bands.join(broadcast(t), Seq("doc_id"), "left_anti")
-          case None    => bands
-        }
-        val scratch = new org.apache.hadoop.fs.Path(idx, ".bands-scratch")
-        if (fs.exists(scratch)) fs.delete(scratch, true)
-        // repartition by the partition key first: ONE file per pbh dir
-        // instead of one per (dir x shuffle partition). Band rows are
-        // 20 bytes — without this, mod 1024 writes ~32k near-empty
-        // files per gen (measured: the fold alone cost 56.0 s at 8M
-        // band rows; 4.8 s after — the soak dedupconsol leg)
-        alive.withColumn("pbh", pbhCol(pbhMod))
-          .repartition(col("pbh"))
-          .write.mode("errorifexists").partitionBy("pbh")
-          .parquet(scratch.toString)
-        // the tombstone skip can empty a NONEMPTY batch — an
-        // all-marker gen dir must not be installed
-        if (!GenForest.hasDataFiles(fs, scratch)) fs.delete(scratch, true)
-        else {
-          fs.mkdirs(genRoot)
-          require(fs.rename(scratch, genDir),
-            s"failed to install consolidated generation at $genDir")
-        }
-      }
-      fs.mkdirs(genRoot)
-      // forest size stamp: the probe's flat-vs-pruned decision input
-      // (one recursive listing, priced at maintenance, never at probe)
-      graft.core.Markers.forceWrite(fs,
-        new org.apache.hadoop.fs.Path(idx, "_bytes"),
-        fs.getContentSummary(genRoot).getLength.toString)
-      // WATERMARK last — the run's single durable commit point
-      graft.core.Markers.forceWrite(fs,
-        new org.apache.hadoop.fs.Path(idx, "_through"), through.toString)
-    } finally {
-      fs.delete(claim, false)
-    }
-  }
-
-  /** Major compaction via the shared [[GenForest]] skeleton: fold the
-    * band forest to one generation; a purge (unpurged tombstones) is
+  /** Major compaction via the shared [[GenForest.purge]] lifecycle: fold
+    * the band forest to one generation; a purge (unpurged tombstones) is
     * the forced lossy fold, stamped afterward so the permanent set
-    * never re-forces. No per-gen sidecar artifacts exist here, so no
-    * `invalidate` hook is needed. */
-  def rebase(spark: SparkSession, indexPath: String): Unit = {
-    val idx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val wm = consolidatedThrough(spark, indexPath).getOrElse(
-      throw new IllegalStateException(
-        s"index at $indexPath has no consolidation watermark — nothing to rebase"))
-    val pbhMod = graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_pbh_mod")).get.toInt
-    val tombs = tombstones(spark, indexPath)
-    val (maxTomb, unpurged) = tombstoneState(fs, idx)
-    GenForest.rebase(spark, indexPath, forestName = "bands", wm = wm,
-        partitionCols = Seq("pbh"), forceFold = unpurged,
-        schema = Some(StoreSchemas.bandsForest)) { forest =>
-      val base = forest.drop("gen").drop("pbh")
-      val alive = tombs match {
-        case Some(t) => base.join(broadcast(t), Seq("doc_id"), "left_anti")
-        case None    => base
-      }
-      // one file per pbh dir — same reasoning as the consolidate write
-      alive.withColumn("pbh", pbhCol(pbhMod)).repartition(col("pbh"))
-    }
-    // stamp AFTER the fold lands — a crash in between re-folds on
-    // retry, never the reverse
-    if (unpurged)
-      graft.core.Markers.forceWrite(fs,
-        new org.apache.hadoop.fs.Path(idx, "_purged"), maxTomb.get.toString)
-    // refresh the probe's size stamp: the fold changed the forest
-    graft.core.Markers.forceWrite(fs,
-      new org.apache.hadoop.fs.Path(idx, "_bytes"),
-      fs.getContentSummary(
-        new org.apache.hadoop.fs.Path(idx, "bands")).getLength.toString)
-  }
+    * never re-forces. The fold changed the forest, so the probe's size
+    * stamp is refreshed. */
+  def rebase(spark: SparkSession, indexPath: String): Unit =
+    GenForest.purge(spark, indexPath, layout, afterFold = stampBytes)
 
   /** Saved-bytes break-even for the probe's explicit leaf-dir
     * enumeration: below this, the whole-root scan (one recursive
@@ -318,20 +197,18 @@ object DedupIngest {
       newBands: DataFrame,
       flatBelowSavedBytes: Long = FlatScanBelowSavedBytes): DataFrame = {
     import spark.implicits._
-    val idx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = fsOf(spark, idx)
+    val idx = new Path(indexPath)
+    val fs = GenForest.fsOf(spark, idx)
     val empty = Seq.empty[(Long, Int, Long)].toDF("doc_id", "band", "bh")
-    val modMarker = graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_pbh_mod"))
+    val modMarker = GenForest.longMarker(fs, idx, "_pbh_mod")
     if (modMarker.isEmpty) return empty
     val pbhMod = modMarker.get.toInt
     val pbs = newBands
       .select(pbhCol(pbhMod).as("pbh")).distinct()
       .collect().map(_.getInt(0)).sorted.toSeq
-    val rootPath = new org.apache.hadoop.fs.Path(idx, "bands")
+    val rootPath = new Path(idx, "bands")
     if (!fs.exists(rootPath) || pbs.isEmpty) return empty
-    val indexBytes = graft.core.Markers.read(fs,
-        new org.apache.hadoop.fs.Path(idx, "_bytes")).map(_.toLong)
+    val indexBytes = GenForest.longMarker(fs, idx, "_bytes")
       .getOrElse(fs.getContentSummary(rootPath).getLength)
     val predictedSaved =
       (indexBytes * (1.0 - pbs.size.toDouble / pbhMod)).toLong
@@ -343,14 +220,8 @@ object DedupIngest {
           .filter(col("pbh").isin(pbs: _*))
           .select("doc_id", "band", "bh")
       } else {
-        val pbhNames = pbs.map(p => s"pbh=$p").toSet
-        val leafDirs = fs.listStatus(rootPath).toSeq
-          .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen="))
-          .flatMap { g =>
-            fs.listStatus(g.getPath).toSeq
-              .map(_.getPath.getName).filter(pbhNames.contains)
-              .map(pbh => s"$indexPath/bands/${g.getPath.getName}/$pbh")
-          }
+        val leafDirs = GenForest.leafDirs(fs, indexPath, "bands",
+          pbs.map(p => s"pbh=$p").toSet)
         if (leafDirs.isEmpty) return empty
         spark.read.option("basePath", s"$indexPath/bands")
           .schema(StoreSchemas.bandsForest)
@@ -358,10 +229,8 @@ object DedupIngest {
           .filter(col("pbh").isin(pbs: _*))
           .select("doc_id", "band", "bh")
       }
-    tombstones(spark, indexPath) match {
-      case Some(t) => scanned.join(broadcast(t), Seq("doc_id"), "left_anti")
-      case None    => scanned
-    }
+    GenForest.hide(scanned, GenForest.tombstones(spark, indexPath, layout),
+      "doc_id")
   }
 
   /** Dedup-on-ingest: near-dup pairs between a NEW batch and the grown
@@ -388,39 +257,10 @@ object DedupIngest {
     * latency; post-maintain tombstone dirs <= 2k-1), compact the hot
     * store below the watermark. */
   def maintain(spark: SparkSession, path: String, indexPath: String,
-      rebaseAtGens: Int = 8, purgeAtBatches: Int = 1): Unit = {
-    require(purgeAtBatches >= 1,
-      s"purgeAtBatches must be >= 1, got $purgeAtBatches")
-    consolidate(spark, path, indexPath)
-    val idx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val gens = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(idx, "bands"), GenDir).size
-    val purged = graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_purged")).map(_.toLong)
-      .getOrElse(-1L)
-    val unpurged = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(idx, "tombstones"), BatchDir)
-      .map(_._1).count(_ > purged)
-    if (gens > rebaseAtGens || unpurged >= purgeAtBatches)
-      rebase(spark, indexPath)
-    consolidatedThrough(spark, indexPath).foreach { wm =>
-      // tiered: the blind-timer amortization rationale at
-      // [[PostingsIngest.maintain]]
-      Compaction.compactTiered(spark, s"$path/bands", safeBelow = wm + 1)
-    }
-    // tombstone-dir bound — the [[AnnIngest.maintain]] rationale: this
-    // store reads tombstones purely as a SET (serve anti-join, encode
-    // skip, rebase purge), so takedown batches at or below the purge
-    // stamp fold into the out-of-namespace [[TombstoneStore]] snapshot
-    // (replay-safe, unlike a Compaction segment a retried tombstone
-    // write could overwrite) and the takedown forest's dir count stays
-    // bounded by the requests landed since the last purge
-    graft.core.Markers.read(fs, new org.apache.hadoop.fs.Path(idx, "_purged"))
-      .map(_.toLong).foreach { purged =>
-        TombstoneStore.fold(spark, indexPath, purged, "doc_id")
-      }
-  }
+      rebaseAtGens: Int = 8, purgeAtBatches: Int = 1): Unit =
+    GenForest.maintain(spark, path, indexPath, layout, rebaseAtGens,
+      purgeAtBatches, () => consolidate(spark, path, indexPath),
+      () => rebase(spark, indexPath))
 
   // ---- driver gate row ------------------------------------------------
 

@@ -96,22 +96,15 @@ object PostingsIngest {
     Retrieval.bm25Rank(hits, dfT, qterms, stats, k, maxDf)
   }
 
-  private val BatchDir = "batch_id=(\\d+)".r
-  private val GenDir = "gen=(\\d+)".r
+  import GenForest.{GenDir, fsOf, numberedDirs}
 
-  private def fsOf(spark: SparkSession, p: org.apache.hadoop.fs.Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def numberedDirs(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      pat: scala.util.matching.Regex): Seq[(Long, org.apache.hadoop.fs.Path)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.flatMap { s =>
-      s.getPath.getName match {
-        case pat(id) if s.isDirectory => Some(id.toLong -> s.getPath)
-        case _                        => None
-      }
-    }
+  private val layout = GenForest.Layout("PostingsIngest",
+    hot = Seq("postings", "stats"), hotSchema = StoreSchemas.postingsBatch,
+    forest = "postings", forestSchema = StoreSchemas.postingsForest,
+    partitionCol = "pb", idCol = "doc_id", modStamp = Some("_pb_mod"),
+    srcGens = true, rowTombstones = true,
+    place = (df, mod) => df.withColumn("pb",
+      pmod(xxhash64(col("tok")), lit(mod.toLong)).cast("int")))
 
   /** Permanent takedown of doc_ids — the lexical twin of
     * [[AnnIngest.tombstone]], with the SAME three layers (serve-hide
@@ -154,19 +147,12 @@ object PostingsIngest {
     val idx = new org.apache.hadoop.fs.Path(indexPath)
     val fs = fsOf(spark, idx)
     fs.mkdirs(idx)
-    val claim = new org.apache.hadoop.fs.Path(idx, "_consolidate_commit")
     // bounded-retry lease (r20): maxWaitMs > 0 polls until a live
     // maintenance window closes, so callers need no retry loop; every
     // attempt stays a fresh atomic tryCreate
-    if (!graft.core.Markers.tryCreateWithin(fs, claim,
-        s"${java.util.UUID.randomUUID()}\ntombstone $batchId", maxWaitMs))
-      throw new IllegalStateException(
-        s"index $indexPath has a consolidation/rebase in flight (or a " +
-          "dead one's marker) — a tombstone committed mid-maintenance can " +
-          "miss both the encode skip and its stats correction; retry once " +
-          s"the lease clears. If no maintainer or writer is live, delete " +
-          s"$claim and retry (the sink is idempotent)")
-    try {
+    GenForest.withLease(fs, idx, s"tombstone $batchId", "; a tombstone " +
+        "committed mid-maintenance can miss both the encode skip and its " +
+        "stats correction: retry once the lease clears", maxWaitMs) {
       // fresh-id guard under the lease (r19): an id at or below the
       // snapshot's covers is invisible to every reader; one at or
       // below `_purged` would fold without its correction ever
@@ -226,16 +212,8 @@ object PostingsIngest {
         }
       EventStreams.idempotentParquetSink(s"$indexPath/tombstones")(
         withDl, batchId)
-    } finally {
-      fs.delete(claim, false)
     }
   }
-
-  private def docTombstones(spark: SparkSession,
-      indexPath: String): Option[DataFrame] =
-    // snapshot ∪ tail (r19): after a fold, the raw dir read would miss
-    // the folded batches (or crash on an emptied tombstones dir)
-    TombstoneStore.readRows(spark, indexPath).map(_.select("doc_id"))
 
   // ---- sidecar root versioning ----------------------------------------
 
@@ -256,16 +234,11 @@ object PostingsIngest {
     * maintenance interval. */
   private def sidecarVersions(fs: org.apache.hadoop.fs.FileSystem,
       idx: org.apache.hadoop.fs.Path,
-      root: String): Seq[(Long, org.apache.hadoop.fs.Path)] = {
-    val pat = (java.util.regex.Pattern.quote(root) + "-v(\\d+)").r
-    if (!fs.exists(idx)) Seq.empty
-    else fs.listStatus(idx).toSeq.flatMap { s =>
-      s.getPath.getName match {
-        case pat(v) if s.isDirectory => Some(v.toLong -> s.getPath)
-        case _                       => None
-      }
-    }
-  }
+      root: String): Seq[(Long, org.apache.hadoop.fs.Path)] =
+    numberedDirs(fs, idx, versionDir(root))
+
+  private def versionDir(root: String) =
+    (java.util.regex.Pattern.quote(root) + "-v(\\d+)").r
 
   /** The LIVE root of sidecar forest `root` (highest published
     * version; the path is returned whether or not it exists yet). */
@@ -298,16 +271,10 @@ object PostingsIngest {
     val listing =
       if (!fs.exists(idx)) Seq.empty
       else fs.listStatus(idx).toSeq
-    def rootOf(root: String): org.apache.hadoop.fs.Path = {
-      val pat = (java.util.regex.Pattern.quote(root) + "-v(\\d+)").r
-      listing.flatMap { s =>
-        s.getPath.getName match {
-          case pat(v) if s.isDirectory => Some(v.toLong -> s.getPath)
-          case _                       => None
-        }
-      }.maxByOption(_._1).map(_._2)
+    def rootOf(root: String): org.apache.hadoop.fs.Path =
+      GenForest.numbered(listing, versionDir(root))
+        .maxByOption(_._1).map(_._2)
         .getOrElse(new org.apache.hadoop.fs.Path(idx, root))
-    }
     val stamps = listing.flatMap(_.getPath.getName match {
       case HorizonStamp(h) => Some(h.toLong)
       case _               => None
@@ -399,7 +366,7 @@ object PostingsIngest {
     // compacted) makes the bucket the identity.
     val horizon = sidecarHorizon(fs, idx)
     def bucket(g: Long): Long = if (g <= horizon) horizon else g
-    val dirMaps = GenForest.numberedDirs(fs, forestRoot, GenDir)
+    val dirMaps = numberedDirs(fs, forestRoot, GenDir)
       .map { case (g, p) => p -> GenForest.readGensMarker(fs, p, g) }
     // the forest dirs holding a given BUCKET's rows — derivation
     // reads exactly these (one dir normally; a fold target holds many)
@@ -413,12 +380,7 @@ object PostingsIngest {
         // understate the tombstone state this bucket reflects once
         // folds run — and an understated cutoff re-applies serve-time
         // corrections for already-purged docs (double subtraction)
-        math.max(
-          numberedDirs(fs, new org.apache.hadoop.fs.Path(idx, "tombstones"),
-            BatchDir).map(_._1).maxOption.getOrElse(-1L),
-          graft.core.Markers.read(fs,
-            new org.apache.hadoop.fs.Path(idx, "_purged"))
-            .map(_.toLong).getOrElse(-1L))
+        GenForest.tombState(fs, idx).cutoff
       else srcMap(b)
     val buckets = srcMap.keys.map(bucket).toSeq.distinct
     def coveredBy(b: Long): Map[Long, Long] =
@@ -481,7 +443,7 @@ object PostingsIngest {
       // and stamping the current max makes the rebuild exact); other
       // buckets keep their rows as encoded, consistent with their
       // inherited cutoffs
-      val rows = docTombstones(spark, idx.toString) match {
+      val rows = GenForest.tombstones(spark, idx.toString, layout) match {
         case Some(t) if needed.contains(horizon) =>
           raw.filter(col("bucket") =!= horizon).unionByName(
             raw.filter(col("bucket") === horizon)
@@ -595,22 +557,8 @@ object PostingsIngest {
   private val HorizonStamp = "_sidecar_horizon\\.(-?\\d+)".r
 
   private[graft] def sidecarHorizon(fs: org.apache.hadoop.fs.FileSystem,
-      idx: org.apache.hadoop.fs.Path): Long = {
-    // a pre-suffix-scheme index may carry the single-file stamp; read
-    // it BEFORE listing the suffix stamps — the migration writes the
-    // suffix stamp first and deletes the legacy file after, so this
-    // order can never observe neither (the reverse order could read
-    // an empty listing, then a just-deleted legacy file → a -1 dip)
-    val legacy = graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_sidecar_horizon")).map(_.toLong)
-    val stamps =
-      if (!fs.exists(idx)) Seq.empty
-      else fs.listStatus(idx).toSeq.flatMap(_.getPath.getName match {
-        case HorizonStamp(h) => Some(h.toLong)
-        case _               => None
-      })
-    (legacy ++ stamps).maxOption.getOrElse(-1L)
-  }
+      idx: org.apache.hadoop.fs.Path): Long =
+    sidecarRootsAndHorizon(fs, idx)._3
 
   def sidecarHorizon(spark: SparkSession, indexPath: String): Long = {
     val idx = new org.apache.hadoop.fs.Path(indexPath)
@@ -667,39 +615,27 @@ object PostingsIngest {
     consolidatedThrough(spark, indexPath).getOrElse(
       throw new IllegalStateException(
         s"index at $indexPath has no consolidation watermark — nothing to compact"))
-    val claim = new org.apache.hadoop.fs.Path(idx, "_consolidate_commit")
-    if (!graft.core.Markers.tryCreate(fs, claim,
-        s"${java.util.UUID.randomUUID()}\ncompact-sidecars"))
-      throw new IllegalStateException(
-        s"index $indexPath already has a consolidation/rebase in flight (or a " +
-          "dead one's marker) — if no maintainer is live, delete " +
-          s"$claim and re-run any maintenance entry point: every phase " +
-          "is idempotent, and a crashed compaction is healed by the " +
-          "reconcile pass each of them runs")
-    try {
+    // a crashed compaction is healed by the reconcile pass every
+    // maintenance entry point runs
+    GenForest.withLease(fs, idx, "compact-sidecars") {
       // co-key both sidecar forests with the forest first (heals any
       // crashed install or a crashed prior compaction, so both roots
       // list the same buckets)
       reconcileSidecars(spark, idx, fs)
-      val tombBatches = numberedDirs(fs,
-        new org.apache.hadoop.fs.Path(idx, "tombstones"), BatchDir).map(_._1)
-      val purged = graft.core.Markers.read(fs,
-        new org.apache.hadoop.fs.Path(idx, "_purged")).map(_.toLong)
-        .getOrElse(-1L)
-      require(tombBatches.isEmpty || tombBatches.max <= purged,
+      require(GenForest.tombState(fs, idx).unpurged == 0,
         s"index at $indexPath has unpurged tombstones — run " +
           "PostingsIngest.rebase (the purge settles every sidecar " +
           "cutoff to one value) before compacting sidecars")
       val gens = numberedDirs(fs, sidecarRoot(fs, idx, "dict"), GenDir)
         .map(_._1).sorted
       val foldable = gens.dropRight(keepLast.max(0))
-      if (foldable.size <= 1) return // nothing (new) to fold
-      val horizon = foldable.max
-      stampSidecarHorizon(fs, idx, horizon)
-      for (root <- Seq("stats", "dict"))
-        foldSidecarTo(spark, idx, fs, root, horizon)
-    } finally {
-      fs.delete(claim, false)
+      // nothing (new) to fold with one foldable gen or none
+      if (foldable.size > 1) {
+        val horizon = foldable.max
+        stampSidecarHorizon(fs, idx, horizon)
+        for (root <- Seq("stats", "dict"))
+          foldSidecarTo(spark, idx, fs, root, horizon)
+      }
     }
   }
 
@@ -742,10 +678,8 @@ object PostingsIngest {
   /** The index's stamped consolidation watermark: every store batch
     * with `batch_id <= through` is already folded in. None = no
     * consolidation has completed at this path yet. */
-  def consolidatedThrough(spark: SparkSession, indexPath: String): Option[Long] = {
-    val p = new org.apache.hadoop.fs.Path(indexPath, "_through")
-    graft.core.Markers.read(fsOf(spark, p), p).map(_.toLong)
-  }
+  def consolidatedThrough(spark: SparkSession, indexPath: String): Option[Long] =
+    GenForest.consolidatedThrough(spark, indexPath)
 
   /** Offline maintenance, INCREMENTAL: fold only store batches newer
     * than the stamped watermark into the artifact at `indexPath` —
@@ -765,161 +699,29 @@ object PostingsIngest {
     * doc_id lives in exactly one batch, and the per-gen layout makes
     * as-of serving (stats AND df) a fold over rows with gen <= asOf.
     *
-    * Crash discipline (the [[Compaction]] claim/build/swap shape, with
-    * roll-FORWARD-by-idempotence instead of a redo log): a `_consolidate_commit`
-    * marker is the mutual-exclusion lease; every phase is keyed by its
-    * own durable completion evidence (gen dir exists → skip build;
-    * sidecar gen dirs key the reconcile; watermark written LAST), so
-    * a crashed run is finished by simply calling consolidate again.
+    * Crash discipline is the shared [[GenForest.consolidate]]
+    * lifecycle (lease, floor guard, gen dir exists → skip build,
+    * watermark written LAST); sidecar gen dirs key the reconcile, so a
+    * crashed run is finished by simply calling consolidate again.
     * `pb_mod` is stamped once at index birth and must never change
     * across incremental runs (old gens were hashed with it). */
   def consolidate(spark: SparkSession, path: String, indexPath: String,
-      pbMod: Int = IndexStore.PostingsPbMod): Unit = {
-    val idx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val batches = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(s"$path/postings"), BatchDir)
-    // an EMPTY batch writes a stats row but no postings directory
-    // (zero rows under partitionBy leave no dir), so batch visibility
-    // comes from BOTH stores — otherwise the watermark stalls behind
-    // idle micro-batch windows and "is everything consolidated?"
-    // operator checks read spurious lag
-    val statBatches = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(s"$path/stats"), BatchDir)
-    val allIds = (batches.map(_._1) ++ statBatches.map(_._1)).distinct
-    if (allIds.isEmpty) return
-    val through = allIds.max
-    val prev = consolidatedThrough(spark, indexPath).getOrElse(-1L)
-    if (through <= prev) return
-    // build floor: the watermark OR the highest generation already on
-    // disk, whichever is later — a run that crashed after its gen
-    // rename but before the watermark write leaves maxGen > watermark,
-    // and folding from the watermark again would duplicate every batch
-    // that gen already covers. Batches in (floor, through] are exactly
-    // the uncovered ones; the dict phase needs no such guard because
-    // it keys on its own stamp and folds whole gens.
-    val genRoot = new org.apache.hadoop.fs.Path(idx, "postings")
-    // a flat one-shot layout (IndexStore.buildPostingsIndex writes
-    // pb= dirs at the top level) cannot be grown in place: mixing it
-    // with gen= dirs gives the reader inconsistent partition depths
-    // and this run no way to know what the flat data covers
-    require(numberedDirs(fs, genRoot, "pb=(\\d+)".r).isEmpty,
-      s"index at $indexPath has the flat one-shot postings layout — " +
-        "point incremental consolidation at a fresh indexPath (or " +
-        "rebuild); it cannot be mixed with gen= generations")
-    // a crashed rebase may hold the REAL forest in its recovery dirs;
-    // consolidating on top of the partial view would strand that data
-    // (a fresh gen recreates the root, and the rebase retry would then
-    // skip its recovery branch). Finish the rebase first.
-    require(!fs.exists(new org.apache.hadoop.fs.Path(idx, ".rebase-scratch-postings"))
-        && !fs.exists(new org.apache.hadoop.fs.Path(idx, ".rebase-old-postings")),
-      s"index at $indexPath has rebase recovery state pending — run " +
-        "PostingsIngest.rebase to settle it before consolidating")
-    GenForest.requireNoLegacyRecoveryDirs(fs, idx)
-    val maxGen = numberedDirs(fs, genRoot, GenDir)
-      .map(_._1).maxOption.getOrElse(-1L)
-    val floor = math.max(prev, maxGen)
-    val newBatches = batches.filter(_._1 > floor).sortBy(_._1)
-
-    // pb_mod is structural: gens already on disk were hashed with it
-    fs.mkdirs(idx)
-    val modMarker = new org.apache.hadoop.fs.Path(idx, "_pb_mod")
-    if (!graft.core.Markers.tryCreate(fs, modMarker, pbMod.toString)) {
-      val stamped = graft.core.Markers.read(fs, modMarker).get.toInt
-      require(stamped == pbMod,
-        s"index at $indexPath was built with pb_mod=$stamped; an " +
-          s"incremental run cannot switch to $pbMod — rebuild the index")
-    }
-
-    val runId = java.util.UUID.randomUUID().toString
-    val claim = new org.apache.hadoop.fs.Path(idx, "_consolidate_commit")
-    if (!graft.core.Markers.tryCreate(fs, claim, s"$runId\n$through"))
-      throw new IllegalStateException(
-        s"index $indexPath already has a consolidation in flight (or a " +
-          "dead one's marker) — if no consolidator is live, delete " +
-          s"$claim and re-run (every phase is idempotent)")
-    try {
-      // BUILD the new gen — reads EXACTLY the new batch dirs (the
-      // explicit path list IS the physical touch set), lands via
-      // scratch + rename so readers never see a half-written gen.
-      // newBatches can be empty even with through > floor (trailing
-      // batches were idle windows) — then there is nothing to build,
-      // but the forest root still must exist for serving.
-      val genDir = new org.apache.hadoop.fs.Path(idx, s"postings/gen=$through")
-      if (newBatches.nonEmpty && !fs.exists(genDir)) {
-        val scratch = new org.apache.hadoop.fs.Path(idx, ".postings-scratch")
-        if (fs.exists(scratch)) fs.delete(scratch, true)
-        val newPostings = spark.read.option("basePath", s"$path/postings")
-          .schema(StoreSchemas.postingsBatch)
-          .parquet(newBatches.map(_._2.toString): _*)
-          .drop("batch_id")
-        // tombstoned docs never enter a fresh generation (their rows
-        // in PRIOR gens stay until the purging rebase; serve hides
-        // them either way). The tombstone-batch watermark this encode
-        // reflects is stamped into the gen's `_gens` marker — the
-        // sidecar rows derived from this gen inherit it as their
-        // correction cutoff. The tombstoneDocs lease guarantees the
-        // listing cannot go stale mid-run.
-        val tombCutoff = math.max(
-          numberedDirs(fs,
-            new org.apache.hadoop.fs.Path(idx, "tombstones"), BatchDir)
-            .map(_._1).maxOption.getOrElse(-1L),
-          // `_purged` floor (r19): folded dirs leave the listing but
-          // their takedowns ARE reflected in this encode's anti-join
-          // (docTombstones reads the snapshot too) — the stamped
-          // cutoff must say so, or serve-time corrections for those
-          // batches would re-apply against this gen's sidecar rows
-          graft.core.Markers.read(fs,
-            new org.apache.hadoop.fs.Path(idx, "_purged"))
-            .map(_.toLong).getOrElse(-1L))
-        val alive = docTombstones(spark, indexPath) match {
-          case Some(t) => newPostings
-            .join(broadcast(t), Seq("doc_id"), "left_anti")
-          case None => newPostings
-        }
-        alive
-          // row-level source identity: survives rebase folds, keys the
-          // sidecars, and scopes as-of row filters — the dir-level gen
-          // partition column alone dies at the first fold
-          .withColumn("src_gen", lit(through))
-          .withColumn("pb",
-            pmod(xxhash64(col("tok")), lit(pbMod.toLong)).cast("int"))
-          .write.mode("errorifexists").partitionBy("pb")
-          .parquet(scratch.toString)
-        // the anti-join can empty a NONEMPTY batch (all docs
-        // tombstoned) — an all-marker gen dir must not be installed
-        if (!GenForest.hasDataFiles(fs, scratch)) fs.delete(scratch, true)
-        else {
-          GenForest.writeGensMarker(fs, scratch, Map(through -> tombCutoff))
-          fs.mkdirs(new org.apache.hadoop.fs.Path(idx, "postings"))
-          require(fs.rename(scratch, genDir),
-            s"failed to install consolidated generation at $genDir")
-        }
-      }
-      fs.mkdirs(new org.apache.hadoop.fs.Path(idx, "postings"))
-      // SIDECARS: per-SOURCE-generation dict deltas and stats rows,
-      // derived from the FOREST (one source of truth — the r15 first
-      // cut folded the hot store's per-batch rows and silently
-      // RE-ADDED purged docs; caught by the total-takedown spec) and
-      // co-keyed with the `_gens` markers' src set. The per-gen
-      // layout is what makes AS-OF serving a fold over rows with
-      // gen <= asOf instead of an unanswerable question — for df too,
-      // so an as-of probe reads deltas instead of re-deriving df from
-      // its own hits (the r15 serving asymmetry, closed).
-      // Residual (shared with the purge rebuild): a zero-token doc has
-      // no posting rows, so it is invisible to n — it scores zero on
-      // every query either way; the drift is idf-only and bounded by
-      // the empty-doc count.
-      reconcileSidecars(spark, idx, fs)
-      // WATERMARK last — the run's single durable commit point
-      graft.core.Markers.forceWrite(fs,
-        new org.apache.hadoop.fs.Path(idx, "_through"), through.toString)
-    } finally {
-      // phases are individually idempotent, so the lease can always be
-      // released: a failed run is finished by calling consolidate again
-      fs.delete(claim, false)
-    }
-  }
+      pbMod: Int = IndexStore.PostingsPbMod): Unit =
+    // SIDECARS before the watermark: per-SOURCE-generation dict deltas
+    // and stats rows, derived from the FOREST (one source of truth —
+    // the r15 first cut folded the hot store's per-batch rows and
+    // silently RE-ADDED purged docs; caught by the total-takedown spec)
+    // and co-keyed with the `_gens` markers' src set. The per-gen
+    // layout is what makes AS-OF serving a fold over rows with
+    // gen <= asOf instead of an unanswerable question — for df too, so
+    // an as-of probe reads deltas instead of re-deriving df from its
+    // own hits (the r15 serving asymmetry, closed).
+    // Residual (shared with the purge rebuild): a zero-token doc has
+    // no posting rows, so it is invisible to n — it scores zero on
+    // every query either way; the drift is idf-only and bounded by the
+    // empty-doc count.
+    GenForest.consolidate(spark, path, indexPath, layout, pbMod,
+      beforeWatermark = (fs, idx) => reconcileSidecars(spark, idx, fs))
 
   /** Major compaction for the gen forest: fold EVERY generation into
     * one base gen (keyed, like a minor run, by the current watermark)
@@ -928,88 +730,32 @@ object PostingsIngest {
     * gens cost the reader listing RPCs and per-gen file opens (the
     * measured pb-mod-64-beats-256 effect, one level up); a rebase
     * after every N minor runs restores the one-big-generation read
-    * shape without ever touching the hot store. Same claim marker and
-    * scratch+rename discipline; the swap replaces the whole postings
-    * forest in two renames (old → trash, scratch → live), and a crash
-    * anywhere is settled by re-running rebase — the recovery prologue
-    * rolls a stamped scratch FORWARD and an unstamped one BACK before
-    * any new work. Dict and stats hold the same logical content either
-    * side of a rebase, so they are not touched. */
-  def rebase(spark: SparkSession, indexPath: String): Unit = {
-    val idx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val wm = consolidatedThrough(spark, indexPath).getOrElse(
-      throw new IllegalStateException(
-        s"index at $indexPath has no consolidation watermark — nothing to rebase"))
-    val pbMod = graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_pb_mod")).get.toInt
-    val tombs = docTombstones(spark, indexPath)
-    // the purge is a LOSSY fold — it must run even on a single-gen
-    // forest, but only while tombstone batches newer than the purge
-    // stamp exist (the set is permanent; without the stamp every later
-    // rebase would re-fold the whole forest forever). The max is
-    // captured in the SAME listing the decision uses: the stamp must
-    // record exactly what the fold saw.
-    val tombBatches = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(idx, "tombstones"), BatchDir).map(_._1)
-    val purged = graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_purged")).map(_.toLong).getOrElse(-1L)
-    val unpurged = tombBatches.nonEmpty && tombBatches.max > purged
-    // The WHOLE rebase runs under the index lease: tombstone commits
-    // are serialized out of every phase window, so the fold, the
-    // sidecar states, and the purge stamp can never disagree about
-    // which takedowns they reflect (before the claimHeld plumbing the
-    // gap between phases admitted a benign-but-subtle interleave that
-    // took a paragraph to prove safe; now it is impossible).
-    val claim = new org.apache.hadoop.fs.Path(idx, "_consolidate_commit")
-    if (!graft.core.Markers.tryCreate(fs, claim,
-        s"${java.util.UUID.randomUUID()}\nrebase $wm"))
-      throw new IllegalStateException(
-        s"index $indexPath already has a consolidation/rebase in flight (or a " +
-          "dead one's marker) — if no maintainer is live, delete " +
-          s"$claim and re-run (every phase is idempotent)")
-    try {
-      // A PURGING rebase changes what the forest contains, so the two
-      // per-gen sidecar forests are rebuilt FIRST, from (live forest ⊖
-      // tombstones) — the same content the fold is about to lay out —
-      // with every row's cutoff advanced to the purge watermark. Order
-      // matters: a reader at ANY point between the phases is consistent,
-      // because each sidecar version is self-describing (old content +
-      // active corrections ≡ new content + retired corrections), while
-      // the old ordering (fold, then rebuild, then stamp) had a window
-      // where rebuilt stats met still-active corrections and double-
-      // subtracted (r15 documented residual, now closed). A crash
-      // anywhere re-runs the whole purge on retry — the stamp is LAST.
-      // A PURE LAYOUT fold touches neither sidecar: they are keyed by
-      // src gen, which the fold preserves.
-      if (unpurged) rebuildPurgedSidecars(spark, idx, fs, tombBatches.max)
-      GenForest.rebase(spark, indexPath, forestName = "postings", wm = wm,
-        partitionCols = Seq("pb"), forceFold = unpurged,
-        foldCutoff = if (unpurged) Some(tombBatches.max) else None,
-        claimHeld = true,
-        schema = Some(StoreSchemas.postingsForest)) { forest =>
-        val base = forest
-          .drop("gen") // pb is re-derived: stable under the stamped mod
-          .drop("pb")  // src_gen (a data column) rides through untouched
-        val alive = tombs match {
-          case Some(t) => base.join(broadcast(t), Seq("doc_id"), "left_anti")
-          case None    => base
-        }
-        alive.withColumn("pb",
-          pmod(xxhash64(col("tok")), lit(pbMod.toLong)).cast("int"))
-      }
-      // heal any src gen whose sidecars are missing (crashed earlier
-      // consolidate) and retire sidecars for src gens a total purge
-      // emptied out of the forest
-      reconcileSidecars(spark, idx, fs)
-      if (unpurged)
-        graft.core.Markers.forceWrite(fs,
-          new org.apache.hadoop.fs.Path(idx, "_purged"),
-          tombBatches.max.toString)
-    } finally {
-      fs.delete(claim, false)
-    }
-  }
+    * shape without ever touching the hot store. The lease, the
+    * two-rename swap and its crash recovery are the shared
+    * [[GenForest.purge]] lifecycle. Dict and stats hold the same
+    * logical content either side of a pure layout rebase, so only a
+    * purge rebuilds them. */
+  def rebase(spark: SparkSession, indexPath: String): Unit =
+    // A PURGING rebase changes what the forest contains, so the two
+    // per-gen sidecar forests are rebuilt FIRST, from (live forest ⊖
+    // tombstones) — the same content the fold is about to lay out —
+    // with every row's cutoff advanced to the purge watermark. Order
+    // matters: a reader at ANY point between the phases is consistent,
+    // because each sidecar version is self-describing (old content +
+    // active corrections ≡ new content + retired corrections), while
+    // the old ordering (fold, then rebuild, then stamp) had a window
+    // where rebuilt stats met still-active corrections and double-
+    // subtracted (r15 documented residual, now closed). A crash
+    // anywhere re-runs the whole purge on retry — the stamp is LAST.
+    // A PURE LAYOUT fold touches neither sidecar: they are keyed by
+    // src gen, which the fold preserves. After the fold, heal any src
+    // gen whose sidecars are missing (crashed earlier consolidate) and
+    // retire sidecars for src gens a total purge emptied out of the
+    // forest.
+    GenForest.purge(spark, indexPath, layout,
+      beforeFold = (fs, idx, tombMax) =>
+        rebuildPurgedSidecars(spark, idx, fs, tombMax),
+      afterFold = (fs, idx) => reconcileSidecars(spark, idx, fs))
 
   /** Rebuild BOTH sidecar forests from (live forest ⊖ tombstones),
     * per src gen, every row stamped `purged_through = tombMax` — the
@@ -1040,10 +786,8 @@ object PostingsIngest {
           .parquet(forestRoot.toString)
           .select(col("doc_id"), col("tok"), col("dl").cast("long").as("dl"),
             col("src_gen").cast("long").as("src_gen"))
-        docTombstones(spark, idx.toString) match {
-          case Some(t) => base.join(broadcast(t), Seq("doc_id"), "left_anti")
-          case None    => base
-        }
+        GenForest.hide(base, GenForest.tombstones(spark, idx.toString, layout),
+          "doc_id")
       }
     // keying respects the compaction horizon: src gens <= horizon stay
     // folded in the base bucket through a purge rebuild (identity when
@@ -1116,60 +860,16 @@ object PostingsIngest {
   def maintain(spark: SparkSession, path: String, indexPath: String,
       rebaseAtGens: Int = 8,
       sidecarKeepLast: Option[Int] = None,
-      purgeAtBatches: Int = 1): Unit = {
-    require(purgeAtBatches >= 1,
-      s"purgeAtBatches must be >= 1, got $purgeAtBatches")
-    consolidate(spark, path, indexPath)
-    val idx = new org.apache.hadoop.fs.Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val gens = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(idx, "postings"), GenDir).size
-    val tombBatches = numberedDirs(fs,
-      new org.apache.hadoop.fs.Path(idx, "tombstones"), BatchDir).map(_._1)
-    val purged = graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_purged")).map(_.toLong).getOrElse(-1L)
-    if (gens > rebaseAtGens || tombBatches.count(_ > purged) >= purgeAtBatches)
-      rebase(spark, indexPath)
-    consolidatedThrough(spark, indexPath).foreach { wm =>
-      // tiered, not full: a blind timer calling full compact rewrites
-      // the whole committed hot store EVERY cycle (the r18 soak's
-      // linear per-cycle slope); the size-tiered fold is amortized
-      // O(log corpus) rewrites per row with O(log) dirs. The two
-      // stores are disjoint dirs with their own claim markers —
-      // overlap their folds (guide §2.6)
-      graft.core.Par.both(
-        Compaction.compactTiered(spark, s"$path/postings", safeBelow = wm + 1),
-        Compaction.compactTiered(spark, s"$path/stats", safeBelow = wm + 1))
-    }
-    sidecarKeepLast.foreach { keep =>
-      // re-read the tombstone state: the rebase above may have purged
-      val tb = numberedDirs(fs,
-        new org.apache.hadoop.fs.Path(idx, "tombstones"), BatchDir).map(_._1)
-      val p2 = graft.core.Markers.read(fs,
-        new org.apache.hadoop.fs.Path(idx, "_purged")).map(_.toLong)
-        .getOrElse(-1L)
-      if (consolidatedThrough(spark, indexPath).nonEmpty &&
-          tb.forall(_ <= p2))
-        compactSidecars(spark, indexPath, keepLast = keep)
-    }
-    // TOMBSTONE-DIR bound (r19, closing the r18 adjudication): batches
-    // at or below the purge stamp fold into the ROW-PRESERVING
-    // snapshot ([[TombstoneStore.foldRows]]) — unlike the ANN/band
-    // stores' id-set fold, this one keeps every column and
-    // materializes `batch_id` as data, because the serve-time score
-    // corrections (IndexStore.bm25FromIndex) compare per-row batch ids
-    // against sidecar cutoffs. Folded batches contribute no live
-    // corrections by construction (tb <= `_purged` <= every sidecar
-    // cutoff after the purge that admitted the fold), so preserving
-    // their rows keeps tombMeta's min(batch_id)/max(dl)/max(gen)
-    // bit-identical while the dir count drops to the unfolded tail.
-    // Listing-derived cutoffs floor at `_purged` (cutoffFor /
-    // tombCutoff) so the shrunken listing can never understate the
-    // reflected tombstone state.
-    graft.core.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(idx, "_purged")).map(_.toLong)
-      .foreach { p => TombstoneStore.foldRows(spark, indexPath, p) }
-  }
+      purgeAtBatches: Int = 1): Unit =
+    GenForest.maintain(spark, path, indexPath, layout, rebaseAtGens,
+      purgeAtBatches, () => consolidate(spark, path, indexPath),
+      () => rebase(spark, indexPath),
+      afterCompact = (fs, idx) => sidecarKeepLast.foreach { keep =>
+        // re-read the tombstone state: the rebase above may have purged
+        if (consolidatedThrough(spark, indexPath).nonEmpty &&
+            GenForest.tombState(fs, idx).unpurged == 0)
+          compactSidecars(spark, indexPath, keepLast = keep)
+      })
 
   // ---- driver gate row ------------------------------------------------
 

@@ -70,33 +70,27 @@ import org.apache.spark.sql.functions._
   */
 object TombstoneStore {
 
-  private val BatchDir = "batch_id=(\\d+)".r
+  import GenForest.{BatchDir, fsOf, numberedDirs}
+
   private val VerDir = "v=(\\d+)".r
-
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
-
-  private def numbered(fs: FileSystem, root: Path,
-      pat: scala.util.matching.Regex): Seq[(Long, Path)] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq.flatMap { s =>
-      s.getPath.getName match {
-        case pat(id) if s.isDirectory => Some(id.toLong -> s.getPath)
-        case _                        => None
-      }
-    }
 
   private def snapRoot(idx: Path) = new Path(idx, "tombstones_snapshot")
 
-  /** The resolved snapshot: highest version dir whose `_covers` stamp
-    * exists (an unstamped dir is a crashed install — ignored, the next
-    * fold's install supersedes it). */
-  private def resolveSnapshot(fs: FileSystem,
-      idx: Path): Option[(Long, Path, Long)] =
-    numbered(fs, snapRoot(idx), VerDir).sortBy(-_._1).iterator.flatMap {
+  /** Every STAMPED snapshot version, highest first: (v, dir, covers).
+    * An unstamped dir is a crashed install — ignored, the next fold's
+    * install supersedes it. Lazy: a caller that needs the first one or
+    * two reads only their stamps. */
+  private def stampedVersions(fs: FileSystem,
+      idx: Path): LazyList[(Long, Path, Long)] =
+    numberedDirs(fs, snapRoot(idx), VerDir).sortBy(-_._1).to(LazyList).flatMap {
       case (v, p) => graft.core.Markers.read(fs, new Path(p, "_covers"))
         .map(c => (v, p, c.toLong))
-    }.nextOption()
+    }
+
+  /** The resolved snapshot: the highest stamped version. */
+  private def resolveSnapshot(fs: FileSystem,
+      idx: Path): Option[(Long, Path, Long)] =
+    stampedVersions(fs, idx).headOption
 
   /** Highest batch id the resolved snapshot reflects; -1 without one. */
   def coveredThrough(spark: SparkSession, indexPath: String): Long = {
@@ -110,10 +104,17 @@ object TombstoneStore {
     * in its tail (the resolved version covers them; the kept previous
     * version's tail starts above ITS covers = this value). */
   private def priorCovers(fs: FileSystem, idx: Path): Long =
-    numbered(fs, snapRoot(idx), VerDir).sortBy(-_._1).iterator.flatMap {
-      case (_, p) => graft.core.Markers.read(fs, new Path(p, "_covers"))
-        .map(_.toLong)
-    }.take(2).toSeq.drop(1).headOption.getOrElse(-1L)
+    stampedVersions(fs, idx).drop(1).headOption.map(_._3).getOrElse(-1L)
+
+  /** The resolved snapshot dir and the tombstone batch dirs ABOVE its
+    * covered stamp — together, the whole takedown set. */
+  private def readParts(fs: FileSystem,
+      idx: Path): (Option[String], Seq[String]) = {
+    val snap = resolveSnapshot(fs, idx)
+    val covers = snap.map(_._3).getOrElse(-1L)
+    (snap.map(_._2.toString), numberedDirs(fs, new Path(idx, "tombstones"),
+      BatchDir).filter(_._1 > covers).map(_._2.toString))
+  }
 
   /** The full takedown id-set: snapshot (if any) unioned with the
     * batch dirs ABOVE its covered stamp. None when no takedown has
@@ -121,12 +122,8 @@ object TombstoneStore {
   def read(spark: SparkSession, indexPath: String,
       idCol: String): Option[DataFrame] = {
     val idx = new Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val snap = resolveSnapshot(fs, idx)
-    val covers = snap.map(_._3).getOrElse(-1L)
-    val tail = numbered(fs, new Path(idx, "tombstones"), BatchDir)
-      .filter(_._1 > covers).map(_._2.toString)
-    val parts = snap.map(_._2.toString).toSeq ++ tail
+    val (snap, tail) = readParts(fsOf(spark, idx), idx)
+    val parts = snap.toSeq ++ tail
     if (parts.isEmpty) None
     // only idCol is ever consumed: declaring it as the read schema
     // prunes the scan to that column AND skips the schema-inference
@@ -157,8 +154,7 @@ object TombstoneStore {
     val idx = new Path(indexPath)
     val fs = fsOf(spark, idx)
     val covers = resolveSnapshot(fs, idx).map(_._3).getOrElse(-1L)
-    val purged = graft.core.Markers.read(fs, new Path(idx, "_purged"))
-      .map(_.toLong).getOrElse(-1L)
+    val purged = GenForest.longMarker(fs, idx, "_purged").getOrElse(-1L)
     val floor = math.max(covers, purged)
     require(batchId > floor,
       s"tombstone batch id $batchId is at or below the store's floor " +
@@ -193,19 +189,12 @@ object TombstoneStore {
     val idx = new Path(indexPath)
     val fs = fsOf(spark, idx)
     fs.mkdirs(idx)
-    val claim = new Path(idx, "_consolidate_commit")
-    if (!graft.core.Markers.tryCreateWithin(fs, claim,
-        s"${java.util.UUID.randomUUID()}\ntombstone $batchId", maxWaitMs))
-      throw new IllegalStateException(
-        s"index $indexPath has a consolidation/rebase/fold in flight (or a " +
-          "dead one's marker) — a tombstone committed mid-maintenance can " +
-          "race the snapshot fold's dir listing; retry once the lease " +
-          s"clears. If no maintainer or writer is live, delete $claim and " +
-          "retry (the sink is idempotent)")
-    try {
+    GenForest.withLease(fs, idx, s"tombstone $batchId", "; a tombstone " +
+        "committed mid-maintenance can race the snapshot fold's dir " +
+        "listing: retry once the lease clears", maxWaitMs) {
       requireFreshBatchId(spark, indexPath, batchId)
       EventStreams.idempotentParquetSink(s"$indexPath/tombstones")(ids, batchId)
-    } finally fs.delete(claim, false)
+    }
   }
 
   /** Fold every tombstone batch dir with id <= `purged` into the
@@ -244,13 +233,8 @@ object TombstoneStore {
     * ever landed. */
   def readRows(spark: SparkSession, indexPath: String): Option[DataFrame] = {
     val idx = new Path(indexPath)
-    val fs = fsOf(spark, idx)
-    val snap = resolveSnapshot(fs, idx)
-    val covers = snap.map(_._3).getOrElse(-1L)
-    val tail = numbered(fs, new Path(idx, "tombstones"), BatchDir)
-      .filter(_._1 > covers).map(_._2.toString)
-    readRowParts(spark, new Path(idx, "tombstones").toString,
-      snap.map(_._2.toString), tail)
+    val (snap, tail) = readParts(fsOf(spark, idx), idx)
+    readRowParts(spark, new Path(idx, "tombstones").toString, snap, tail)
   }
 
   /** Snapshot ∪ tail as ONE declared-schema read per side: the old
@@ -285,15 +269,8 @@ object TombstoneStore {
       build: (Option[String], Seq[String]) => DataFrame): Unit = {
     val idx = new Path(indexPath)
     val fs = fsOf(spark, idx)
-    val claim = new Path(idx, "_consolidate_commit")
-    if (!graft.core.Markers.tryCreate(fs, claim,
-        s"${java.util.UUID.randomUUID()}\ntombstone-fold $purged"))
-      throw new IllegalStateException(
-        s"index $indexPath already has a maintenance op in flight (or a " +
-          s"dead one's marker) — if no maintainer is live, delete $claim " +
-          "and re-run (every phase is idempotent)")
-    try foldUnderLease(spark, idx, fs, purged, shardBytes, build)
-    finally fs.delete(claim, false)
+    GenForest.withLease(fs, idx, s"tombstone-fold $purged")(
+      foldUnderLease(spark, idx, fs, purged, shardBytes, build))
   }
 
   private def foldUnderLease(spark: SparkSession, idx: Path,
@@ -301,7 +278,7 @@ object TombstoneStore {
       build: (Option[String], Seq[String]) => DataFrame): Unit = {
     val snap = resolveSnapshot(fs, idx)
     val covers = snap.map(_._3).getOrElse(-1L)
-    val foldable = numbered(fs, new Path(idx, "tombstones"), BatchDir)
+    val foldable = numberedDirs(fs, new Path(idx, "tombstones"), BatchDir)
       .filter { case (id, _) => id <= purged }
     if (foldable.forall(_._1 <= covers) &&
         (foldable.isEmpty || snap.nonEmpty)) {
@@ -340,7 +317,7 @@ object TombstoneStore {
     // renaming onto an unstamped orphan (external damage) would
     // install an unresolvable snapshot and the source deletion below
     // would then lose the folded ids from every read
-    val nextV = (numbered(fs, snapRoot(idx), VerDir).map(_._1) :+ -1L).max + 1
+    val nextV = (numberedDirs(fs, snapRoot(idx), VerDir).map(_._1) :+ -1L).max + 1
     fs.mkdirs(snapRoot(idx))
     require(fs.rename(scratch, new Path(snapRoot(idx), s"v=$nextV")),
       s"failed to install tombstone snapshot v=$nextV at $idx")
@@ -349,11 +326,8 @@ object TombstoneStore {
     // complete snapshot); everything else — older stamped versions and
     // unstamped orphans alike — is settled debt, safe to delete under
     // the lease
-    val keep = numbered(fs, snapRoot(idx), VerDir)
-      .filter { case (_, p) =>
-        graft.core.Markers.read(fs, new Path(p, "_covers")).nonEmpty }
-      .map(_._1).sorted.takeRight(2).toSet
-    numbered(fs, snapRoot(idx), VerDir)
+    val keep = stampedVersions(fs, idx).take(2).map(_._1).toSet
+    numberedDirs(fs, snapRoot(idx), VerDir)
       .filterNot(d => keep.contains(d._1)).foreach(d => fs.delete(d._2, true))
     // sources last, ONE FOLD CYCLE LATE (r19): delete only dirs at or
     // below the PREVIOUS snapshot's covers — a reader that resolved

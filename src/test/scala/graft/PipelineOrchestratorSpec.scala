@@ -108,10 +108,15 @@ class PipelineOrchestratorSpec extends SparkSpec {
     // final tables exist as parquet on disk
     for (n <- Seq("cell_synonym", "gene_compound_tissue", "target", "clinical_trial"))
       assert(new java.io.File(s"${cfg.finalDir}/$n.parquet").exists(), n)
+
+    // every returned table carries the schema that inference gives a
+    // bare read of the same file
+    for ((n, df) <- tables)
+      assert(df.schema == spark.read.parquet(s"${cfg.finalDir}/$n.parquet").schema, n)
   }
 
-  test("resumePerPset skips completed PSets and rebuilds after a crash (no marker)") {
-    val root = Files.createTempDirectory("orch-r").toString
+  /** The minimal one-cell Mini PSet export under `root`. */
+  private def writeMiniPSet(root: String): Unit = {
     val dir = new java.io.File(s"$root/Mini_PSet"); dir.mkdirs()
     def w(n: String, s: String): Unit =
       Files.writeString(java.nio.file.Paths.get(dir.getPath, n), s)
@@ -124,6 +129,11 @@ class PipelineOrchestratorSpec extends SparkSpec {
       ".rownames,aac_recomputed,ic50_recomputed,HS,einf,ec50,DSS1,DSS2,DSS3\ne1,0.5,0.3,1,0.1,0.2,1,2,3\n")
     w("molecularProfiles$rna$rowData.csv", ".features\nENSG1.2\n")
     w("molecularProfiles$rna$colData.csv", "cellid\nc1\n")
+  }
+
+  test("resumePerPset skips completed PSets and rebuilds after a crash (no marker)") {
+    val root = Files.createTempDirectory("orch-r").toString
+    writeMiniPSet(root)
     val cfg = PipelineConfig(
       rawDir = root,
       workDir = Files.createTempDirectory("orch-r-work").toString,
@@ -155,5 +165,22 @@ class PipelineOrchestratorSpec extends SparkSpec {
     val mtime2 = probe.lastModified()
     Pipeline.run(spark, cfg, meta)
     assert(probe.lastModified() > mtime2)
+  }
+
+  test("Pipeline.run reads and writes through Hadoop FileSystem URIs (file:)") {
+    // rawDir/workDir/finalDir as `file:` URIs: PSet and per-PSet table
+    // listings must go through the session's FileSystem, not java.io
+    val root = Files.createTempDirectory("orch-uri").toString
+    writeMiniPSet(root)
+    val work = Files.createTempDirectory("orch-uri-work").toString
+    val fin = Files.createTempDirectory("orch-uri-final").toString
+    val cfg = PipelineConfig(rawDir = s"file:$root", workDir = s"file:$work",
+      finalDir = s"file:$fin", psetNames = Seq("Mini"))
+    val tables = Pipeline.run(spark, cfg, Seq(("d1", "UID1")).toDF("name", "compound_uid"))
+    assert(tables("cell").count() == 1)
+    assert(tables("experiment").count() == 1)
+    assert(tables("dose_response").count() == 1)
+    assert(new java.io.File(s"$work/Mini/Mini_cell.parquet").exists())
+    assert(new java.io.File(s"$fin/experiment.parquet").exists())
   }
 }

@@ -131,19 +131,14 @@ class Round21Spec extends SparkSpec {
   test("jaccardPairsPrefix per-doc array table: one window exchange + " +
       "one collect exchange on the full stream (r22 — the doc-keyed " +
       "rank window and per-side docSets collects are gone)") {
-    // reconstruct the pre-pin docsAll shape the operator pins
-    val sh = corpus
-      .select(col("doc_id"),
-        explode(expr("transform(sequence(0, size(split(trim(text), '\\\\s+'))-3), " +
-          "i -> concat_ws(' ', slice(split(trim(text), '\\\\s+'), i+1, 3)))"))
-          .as("shingle"))
-    val docsAll = sh
-      .select(col("doc_id"), xxhash64(col("shingle")).as("shingle"))
-      .withColumn("__df", count(lit(1)).over(
-        org.apache.spark.sql.expressions.Window.partitionBy("shingle")))
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("__df"), col("shingle"))))
-        .as("__ps"))
-    assert(exchangeCount(docsAll) == 2)
+    // the operator's own pre-pin frame; the deliberate Fanout
+    // repartition of the shingle stream (REPARTITION_BY_NUM) is not
+    // the table's, as in the posting-path test
+    val docsAll = Dedup.docsAllPrePin(Dedup.shingles(corpus))
+    val plan = docsAll.queryExecution.explainString(
+      org.apache.spark.sql.execution.FormattedMode)
+    val fans = "REPARTITION_BY_NUM".r.findAllIn(plan).size
+    assert(fans <= 1, plan)
+    assert(exchangeCount(docsAll) - fans == 2, plan)
   }
 }
