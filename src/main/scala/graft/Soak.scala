@@ -278,7 +278,8 @@ object Soak {
     // load is CONSTANT while the corpus/index grows 12x. The cost
     // curve is the claim under test: batch time must be dominated by
     // batch-bounded work + one linear index scan, never corpus
-    // re-shingling (flat-ish, not linear-in-b growth).
+    // re-shingling (flat-ish, not linear-in-b growth). Nothing is
+    // consolidated, so every probe reads the whole hot band tail.
     val ingestRoot = java.nio.file.Files.createTempDirectory("soak-ingest").toString
     val batchDocs = 5000L * mult
     for (b <- 0 until 12 if want("ingest")) {
@@ -288,8 +289,8 @@ object Soak {
           s"i -> concat(CASE WHEN id % 10 = 0 THEN 'b${b - 1}' ELSE 'b$b' END, " +
           s"'_g', id div 5, '_w', i)), concat('u', id + ${b * batchDocs}))").as("text"))
       val t0 = System.nanoTime()
-      graft.streaming.DocIngest.ingestBatch(batch, b.toLong,
-        s"$ingestRoot/docs", s"$ingestRoot/index", s"$ingestRoot/pairs", 0.5)
+      graft.streaming.DedupIngest.dedupBatch(batch, b.toLong,
+        s"$ingestRoot/store", s"$ingestRoot/index", 0.5)
       println(f"SOAK ingest_batch_$b%-14s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     }
 
@@ -473,8 +474,8 @@ object Soak {
           .as("embedding"))
       val t0 = System.nanoTime()
       graft.streaming.VecIngest.ingestBatch(batch, b.toLong,
-        s"$vecIngestRoot/vecs", s"$vecIngestRoot/index",
-        s"$vecIngestRoot/pairs", 0.99, planesPerTable = 16)
+        s"$vecIngestRoot/store", s"$vecIngestRoot/index", 0.99,
+        planesPerTable = 16)
       println(f"SOAK vingest_batch_$b%-13s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     }
 
@@ -813,25 +814,19 @@ object Soak {
       time("compaction_scan_compacted") { scanAgg }
     }
 
-    // What the pruned bulk tier buys a growing-index probe: the flat
-    // store is scanned whole every batch (O(corpus)); the tier is read
-    // only at the pb dirs the batch's own buckets hash into. 200k-vec
-    // corpus at the 16-plane ingest width, 20-vec probe batch (160
-    // buckets -> <=160 of 1024 pbs).
     // End-to-end ingest + maintenance runbook: 24 direct ingestBatch
     // calls of 10k vecs each (240k-vec corpus), per-batch wall time
-    // printed so the flat-store growth trend is visible, then
-    // maintainStores (tier + fold + compact) and one more batch over
-    // the maintained stores — the claim under test is that the
+    // printed so the hot-tail growth trend is visible, then maintain
+    // (consolidate + rebase + compact) and one more batch over the
+    // maintained store — the claim under test is that the
     // post-maintenance batch costs what an EARLY batch cost, not what
     // the last pre-maintenance batch cost.
     if (want("runbook")) {
       val root = s"${sys.props("java.io.tmpdir")}/graft_soak_runbook"
       val rp = new org.apache.hadoop.fs.Path(root)
-      val rfs = rp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val rfs = rp.getFileSystem(spark.sessionState.newHadoopConf())
       if (rfs.exists(rp)) rfs.delete(rp, true)
-      val (vecsP, idxP, pairsP, ckpt) =
-        (s"$root/vecs", s"$root/index", s"$root/pairs", s"$root/ckpt")
+      val (storeP, idxP, ckpt) = (s"$root/store", s"$root/index", s"$root/ckpt")
       // hash-based independent directions, NOT the sin-waveform fixture:
       // sin(id*13 + i*31) has near-recurrences (ids 29 apart differ by
       // ~0.006 rad in EVERY dim), so every vector belongs to a long
@@ -846,8 +841,8 @@ object Soak {
       var reported = Set(0L, 11L, 23L)
       for (b <- 0L until 24L) {
         val t0 = System.nanoTime()
-        graft.streaming.VecIngest.ingestBatch(batchDf(b), b, vecsP, idxP,
-          pairsP, minSim = 0.95)
+        graft.streaming.VecIngest.ingestBatch(batchDf(b), b, storeP, idxP,
+          minSim = 0.95)
         if (reported(b))
           println(f"SOAK runbook_batch_$b%-12s ${(System.nanoTime() - t0) / 1e9}%8.2f s")
       }
@@ -855,28 +850,33 @@ object Soak {
       for (i <- 0L until 24L) graft.core.Markers.tryCreate(rfs,
         new org.apache.hadoop.fs.Path(s"$ckpt/commits/$i"), "{}")
       val tm = System.nanoTime()
-      val report = graft.streaming.VecIngest.maintainStores(
-        spark, vecsP, idxP, pairsP, ckpt)
+      graft.streaming.VecIngest.maintain(spark, storeP, idxP, ckpt)
+      val gens = rfs.listStatus(new org.apache.hadoop.fs.Path(s"$idxP/buckets"))
+        .count(_.getPath.getName.startsWith("gen="))
       println(f"SOAK runbook_maintain         ${(System.nanoTime() - tm) / 1e9}%8.2f s " +
-        report.toSeq.sorted.map { case (k, v) => s"$k=$v" }.mkString("(", ", ", ")"))
+        s"(through=${graft.streaming.GenForest.consolidatedThrough(spark, idxP)
+          .getOrElse(-1L)}, gens=$gens)")
       val t0 = System.nanoTime()
-      graft.streaming.VecIngest.ingestBatch(batchDf(24L), 24L, vecsP, idxP,
-        pairsP, minSim = 0.95)
+      graft.streaming.VecIngest.ingestBatch(batchDf(24L), 24L, storeP, idxP,
+        minSim = 0.95)
       println(f"SOAK runbook_batch_post       ${(System.nanoTime() - t0) / 1e9}%8.2f s")
     }
 
+    // What the pb-pruned bucket forest buys a growing-index probe: the
+    // hot store is scanned whole (O(corpus)); the forest is read only
+    // at the pb dirs the batch's own buckets hash into. 200k-vec
+    // corpus at the 16-plane ingest width, 20-vec probe batch (160
+    // buckets -> <=160 of 1024 pbs).
     if (want("tiering")) {
       import graft.operators.Similarity
-      val store = s"${sys.props("java.io.tmpdir")}/graft_soak_tieridx"
-      val fs = new org.apache.hadoop.fs.Path(store).getFileSystem(
-        spark.sparkContext.hadoopConfiguration)
-      for (suffix <- Seq("", "_tier", "_tier_mod", "_planes")) {
-        val p = new org.apache.hadoop.fs.Path(store + suffix)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
+      val root = s"${sys.props("java.io.tmpdir")}/graft_soak_tieridx"
+      val rp = new org.apache.hadoop.fs.Path(root)
+      val fs = rp.getFileSystem(spark.sessionState.newHadoopConf())
+      if (fs.exists(rp)) fs.delete(rp, true)
+      val (storeP, idxP, ckpt) = (s"$root/store", s"$root/index", s"$root/ckpt")
       val bands = Similarity.lshBandIndex(vecs,
         planesPerTable = Similarity.IngestPlanesPerTable)
-      graft.streaming.EventStreams.idempotentParquetSink(store)(bands, 0L)
+      graft.streaming.EventStreams.idempotentParquetSink(s"$storeP/buckets")(bands, 0L)
       val batch = spark.range(20).select(
         (col("id") + nVecs).as("vec_id"),
         expr("transform(sequence(0, 63), i -> CAST(sin((id + 7) * 13 + i * 31) AS FLOAT))")
@@ -888,22 +888,27 @@ object Soak {
         buckets.join(broadcast(batchBuckets), Seq("tbl", "bucket"))
           .select(col("new_id"), col("vec_id").as("corpus_id")).distinct()
       time("tiering_probe_flat") {
-        probe(spark.read.parquet(store).select("vec_id", "tbl", "bucket")) }
-      val ckpt = s"$store-ckpt"
+        probe(spark.read.parquet(s"$storeP/buckets").select("vec_id", "tbl", "bucket")) }
       fs.mkdirs(new org.apache.hadoop.fs.Path(s"$ckpt/commits"))
       graft.core.Markers.tryCreate(fs,
         new org.apache.hadoop.fs.Path(s"$ckpt/commits/0"), "{}")
       val tt = System.nanoTime()
-      val ts = graft.streaming.VecIngest.tierIndexStore(spark, store, ckpt).get
+      graft.streaming.VecIngest.consolidate(spark, storeP, idxP, ckpt)
+      val forest = new org.apache.hadoop.fs.Path(s"$idxP/buckets")
+      val rows = graft.streaming.StoreSchemas.footerRowCount(fs,
+        spark.sessionState.newHadoopConf(), forest)
       println(f"SOAK tiering_build               ${(System.nanoTime() - tt) / 1e9}%8.2f s " +
-        s"(${ts.rows} rows re-laid by pb)")
-      val tier = graft.streaming.Compaction.loadTier(spark, s"${store}_tier").get
+        s"($rows rows re-laid by pb)")
       val pbs = batchBuckets
         .select(pmod(col("bucket"), lit(graft.streaming.VecIngest.IndexTierMod)).as("pb"))
         .distinct().collect().map(_.getInt(0))
       println(s"SOAK tiering_probe_pbs           ${pbs.length} of ${graft.streaming.VecIngest.IndexTierMod}")
+      // read as VecIngest's probe reads it: with the forest schema
+      val forestDf = spark.read.schema(graft.streaming.StoreSchemas.bucketsForest)
+        .parquet(forest.toString)
       time("tiering_probe_pruned") {
-        probe(tier.filter(col("pb").isin(pbs.map(Integer.valueOf): _*))
+        probe(forestDf
+          .filter(col("pb").isin(pbs.map(Integer.valueOf): _*))
           .select("vec_id", "tbl", "bucket")) }
     }
 
@@ -1090,7 +1095,7 @@ object Soak {
     // tombstone dirs by the row-preserving snapshot fold, which keeps
     // the per-row batch ids the correction algebra depends on as DATA
     // while retiring the dirs; the ANN/band stores fold theirs as
-    // plain id-sets — Round18Spec / Round19Spec).
+    // plain id-sets — the AnnIngestSpec / PostingsIngestSpec loops).
     if (want("blindtimer")) {
       import graft.streaming.PostingsIngest
       import graft.operators.{IndexStore, Retrieval}
@@ -1405,7 +1410,7 @@ object Soak {
     // Growing MinHash band store: the claim under measurement is the
     // probe shape — a SMALL daily batch against a LARGE grown index
     // should scan only its pruned pbh partitions, vs the flat
-    // DocIngest-shape probe that scans every band row ever ingested.
+    // flat-scan probe that reads every band row ever ingested.
     // pbhMod here is sized for the pruning demonstration (a 20-doc
     // batch = 160 band rows over mod 1024 touches ~15% of dirs); a
     // production sizing balances that against file counts exactly as

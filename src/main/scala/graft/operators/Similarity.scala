@@ -1250,7 +1250,7 @@ object Similarity {
     // filter is also strictly earlier than DPP (no runtime subquery
     // wait) and works under either reader; Round14Spec asserts the
     // cell filter reaches the scan's PartitionFilters. Same move as
-    // VecIngest's pb-tier probe, for the same reason. The literal type
+    // VecIngest's pb-pruned forest probe, for the same reason. The literal type
     // must match the partition column EXACTLY — a bigint literal
     // against an int partition column wraps the scan key in a cast,
     // which disqualifies it from PartitionFilters.

@@ -230,8 +230,8 @@ object AnnIngest {
   def rebase(spark: SparkSession, indexPath: String): Unit =
     GenForest.purge(spark, indexPath, layout)
 
-  /** One-call maintenance runbook (the [[VecIngest.maintainStores]]
-    * shape for this store): consolidate whatever is new, rebase when
+  /** One-call maintenance runbook ([[GenForest.maintain]], the
+    * [[VecIngest.maintain]] shape for this store): consolidate whatever is new, rebase when
     * the generation count passes `rebaseAtGens` OR `purgeAtBatches`
     * tombstone batches are unpurged, then compact the hot store below
     * the watermark (the only compaction range the floor contract

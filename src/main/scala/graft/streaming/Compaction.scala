@@ -7,7 +7,8 @@ import org.apache.spark.sql.functions._
 
 /** Offline compaction for the `batch_id=`-partitioned parquet stores
   * the streaming sinks grow ([[EventStreams.idempotentParquetSink]],
-  * [[DocIngest]], [[VecIngest]]): merge many small per-micro-batch
+  * the hot stores [[GenForest.maintain]] keeps below each index
+  * watermark): merge many small per-micro-batch
   * partitions into one size-targeted segment — the small-files
   * problem every long-lived streaming sink accumulates — without
   * breaking the sink's replay contract or losing data to a crash.
@@ -69,10 +70,7 @@ object Compaction {
   case class CompactionStats(segmentId: Long, batchesMerged: Int,
       filesBefore: Long, filesAfter: Long, rows: Long)
 
-  private val BatchDir = "batch_id=(\\d+)".r
-
-  private def fsOf(spark: SparkSession, p: Path): FileSystem =
-    p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+  import GenForest.{BatchDir, fsOf, numberedDirs}
 
   private def markerPath(store: Path) = new Path(store, "_compact_commit")
   private def scratchPath(store: Path) = new Path(store, ".compact-scratch")
@@ -98,15 +96,6 @@ object Compaction {
     }
   }
 
-  private def partitionDirs(fs: FileSystem, store: Path): Seq[(Long, Path)] =
-    if (!fs.exists(store)) Seq.empty
-    else fs.listStatus(store).toSeq.flatMap { s =>
-      s.getPath.getName match {
-        case BatchDir(id) if s.isDirectory => Some(id.toLong -> s.getPath)
-        case _                             => None
-      }
-    }
-
   private def dataFiles(fs: FileSystem, dir: Path): Seq[(Path, Long)] =
     fs.listStatus(dir).toSeq
       .filter(s => s.isFile && !s.getPath.getName.startsWith("_")
@@ -128,7 +117,7 @@ object Compaction {
       onPhase: String => Unit = _ => ()): Option[CompactionStats] = {
     val store = new Path(storePath)
     val fs = fsOf(spark, store)
-    val eligible = partitionDirs(fs, store).filter(_._1 < safeBelow).sortBy(_._1)
+    val eligible = numberedDirs(fs, store, BatchDir).filter(_._1 < safeBelow).sortBy(_._1)
     compactDirs(spark, store, fs, eligible, targetFileBytes, onPhase)
   }
 
@@ -162,7 +151,7 @@ object Compaction {
     // the eligible dir count strictly decreases
     while (merged) {
       merged = false
-      val sized = partitionDirs(fs, store).filter(_._1 < safeBelow)
+      val sized = numberedDirs(fs, store, BatchDir).filter(_._1 < safeBelow)
         .map { case (id, p) =>
           (id, p, dataFiles(fs, p).map(_._2).sum) }
       // a committed batch dir holding no data files (an all-filtered
@@ -216,13 +205,6 @@ object Compaction {
 
     val segmentId = eligible.head._1
     val runId = java.util.UUID.randomUUID().toString
-    // the two maintenance ops share the same source dirs: refuse when
-    // the OTHER op's marker is present (its claim is their mutual
-    // exclusion; this check closes the cross-op hole)
-    if (fs.exists(tierMarkerPath(store)))
-      throw new IllegalStateException(
-        s"store $storePath has a tiering run in flight (or a dead one's " +
-          "marker) — resolve it with Compaction.recoverTier before compacting")
     // CLAIM: the marker is lease + redo log in one — first writer
     // wins, and its content alone is enough to finish or undo the run
     val manifest = (Seq(runId, segmentId.toString) ++ eligible.map(_._2.getName))
@@ -232,15 +214,6 @@ object Compaction {
         s"store $storePath already has a compaction in flight (or a dead " +
           "one's commit marker). If no compactor is live, run " +
           "Compaction.recover to roll it forward/back, then retry")
-    // double-check under our own claim: a tier run claiming in the
-    // window between the pre-check and our create would otherwise
-    // slip past both pre-checks — release and fail (nothing moved)
-    if (fs.exists(tierMarkerPath(store))) {
-      fs.delete(markerPath(store), false)
-      throw new IllegalStateException(
-        s"store $storePath gained a concurrent tiering claim — retry after " +
-          "the other maintenance op finishes")
-    }
 
     // BUILD: under the claim, any leftover scratch is dead garbage.
     // A build failure (corrupt file, resource exhaustion) releases
@@ -341,279 +314,6 @@ object Compaction {
         true
       case None =>
         if (fs.exists(scratch)) { fs.delete(scratch, true); true } else false
-    }
-  }
-
-  // ---- cross-store tiering -------------------------------------------
-
-  /** What one [[tierByKey]] call did: moved `batchesMoved` committed
-    * source partitions (`rows` rows) into the bulk tier generation
-    * `gen`. */
-  case class TierStats(gen: String, batchesMoved: Int, rows: Long)
-
-  private def tierMarkerPath(store: Path) = new Path(store, "_tier_commit")
-
-  /** Move every `batch_id < safeBelow` partition of `storePath` into a
-    * BULK TIER at `tierPath`, re-laid-out as partition dirs of
-    * `keyName` = `keyCol` (e.g. `pb = bucket mod 64`) — the layout a
-    * point/probe read can PRUNE, where the flat sink store can only be
-    * scanned. This is the growing-index answer to "per-batch probe
-    * cost grows with the corpus": the append-only tail stays small
-    * (only batches the stream could still replay), probes prune the
-    * bulk tier to the key values they actually touch
-    * ([[VecIngest.matchAgainstIndex]]), and maintenance keeps folding
-    * the committed tail in.
-    *
-    * Same claim/build/swap discipline as [[compact]], one store-level
-    * maintenance op at a time (the ops share the store's dirs; run
-    * compact OR tier on a given store, never concurrently): claim the
-    * `_tier_commit` marker; build the tier generation at
-    * `tierPath/gen=<runId>` (its parquet `_SUCCESS` is the
-    * completeness mark — readers via [[loadTier]] ignore uncommitted
-    * generations, so a crashed build is invisible); then delete the
-    * moved sources and release. [[recoverTier]] rolls a crashed run
-    * forward iff the generation committed, else back. */
-  def tierByKey(spark: SparkSession, storePath: String, tierPath: String,
-      safeBelow: Long, keyCol: org.apache.spark.sql.Column,
-      keyName: String = "pb",
-      onPhase: String => Unit = _ => ()): Option[TierStats] = {
-    val store = new Path(storePath)
-    val fs = fsOf(spark, store)
-    val eligible = partitionDirs(fs, store).filter(_._1 < safeBelow).sortBy(_._1)
-    if (eligible.isEmpty) return None
-
-    val runId = java.util.UUID.randomUUID().toString
-    // cross-op exclusion, mirror of the check in [[compact]]
-    if (fs.exists(markerPath(store)))
-      throw new IllegalStateException(
-        s"store $storePath has a compaction in flight (or a dead one's " +
-          "marker) — resolve it with Compaction.recover before tiering")
-    val manifest = (Seq(runId) ++ eligible.map(_._2.getName)).mkString("\n")
-    if (!Markers.tryCreate(fs, tierMarkerPath(store), manifest))
-      throw new IllegalStateException(
-        s"store $storePath already has a tiering run in flight (or a dead " +
-          "one's marker). If no maintenance job is live, run " +
-          "Compaction.recoverTier, then retry")
-    // double-check under our own claim (mirror of compact's):
-    // a compaction claiming in the pre-check window must not coexist
-    if (fs.exists(markerPath(store))) {
-      fs.delete(tierMarkerPath(store), false)
-      throw new IllegalStateException(
-        s"store $storePath gained a concurrent compaction claim — retry " +
-          "after the other maintenance op finishes")
-    }
-    val genDir = new Path(s"$tierPath/gen=$runId")
-    try {
-      spark.read.option("basePath", storePath)
-        .parquet(eligible.map(_._2.toString): _*)
-        .drop("batch_id")
-        .withColumn(keyName, keyCol)
-        // repartition on the key first: without it every write task
-        // opens a file in every key dir (tasks x keys small files);
-        // with it each key's rows land in one task -> one file per
-        // key dir. One shuffle — the price of the pruned layout, paid
-        // at maintenance time, never at probe time.
-        .repartition(col(keyName))
-        .write.partitionBy(keyName).mode("errorifexists").parquet(genDir.toString)
-    } catch {
-      case scala.util.control.NonFatal(e) => // release: nothing moved
-        if (fs.exists(genDir)) fs.delete(genDir, true)
-        fs.delete(tierMarkerPath(store), false)
-        throw e
-    }
-    onPhase("built")
-    onPhase("swapping")
-    finishTierSwap(fs, store, eligible.map(_._2.getName))
-    // footer row counts: bit-equal to a count() job, zero jobs
-    val rows = StoreSchemas.footerRowCount(fs,
-      spark.sessionState.newHadoopConf(), genDir)
-    Some(TierStats(runId, eligible.size, rows))
-  }
-
-  private def finishTierSwap(fs: FileSystem, store: Path,
-      sourceNames: Seq[String]): Unit = {
-    sourceNames.foreach { n =>
-      val p = new Path(store, n)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    fs.delete(tierMarkerPath(store), false)
-  }
-
-  /** The committed generations of a bulk tier, or None when the tier
-    * has none. Uncommitted (crashed-build) generations are excluded by
-    * their missing `_SUCCESS`, so readers never see a partial move.
-    * Columns: the store's data columns + the tier key + `gen`. */
-  def loadTier(spark: SparkSession, tierPath: String): Option[DataFrame] = {
-    val tier = new Path(tierPath)
-    val fs = fsOf(spark, tier)
-    if (!fs.exists(tier)) return None
-    val committed = fs.listStatus(tier).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen=") &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath.toString)
-    if (committed.isEmpty) None
-    else Some(spark.read.option("basePath", tierPath).parquet(committed: _*))
-  }
-
-  // -- layout-mod stamp: the tier's pruning key is a store-lifetime
-  //    constant (prune with a different mod than the layout was built
-  //    with and matching partitions silently drop — lost recall, the
-  //    plane-width failure class). Stamped at first tiering, checked
-  //    at every later tiering, read by every probe.
-
-  private def modStampPath(indexPath: String) = new Path(s"${indexPath}_tier_mod")
-
-  def requireTierMod(spark: SparkSession, indexPath: String, mod: Int,
-      stampIfNew: Boolean): Unit = {
-    val p = modStampPath(indexPath)
-    val fs = fsOf(spark, p)
-    def check(stored: Int): Unit = require(stored == mod,
-      s"index tier at ${indexPath}_tier is laid out with key mod $stored; " +
-        s"tiering or probing at mod $mod would silently drop matching " +
-        "partitions — pass the store's mod explicitly")
-    Markers.read(fs, p) match {
-      case Some(v) => check(v.toInt)
-      case None if stampIfNew =>
-        if (!Markers.tryCreate(fs, p, mod.toString))
-          check(Markers.read(fs, p).get.toInt)
-      case None => throw new IllegalStateException(
-        s"index tier exists at ${indexPath}_tier but has no mod stamp — " +
-          s"backfill ${indexPath}_tier_mod with the mod it was built with")
-    }
-  }
-
-  /** The committed bulk tier of `<indexPath>_tier` together with its
-    * stamped layout mod, for probe pruning; None when no tier. */
-  def loadTierWithMod(spark: SparkSession, indexPath: String): Option[(DataFrame, Int)] =
-    loadTier(spark, s"${indexPath}_tier").map { t =>
-      val p = modStampPath(indexPath)
-      val fs = fsOf(spark, p)
-      val mod = Markers.read(fs, p).getOrElse(throw new IllegalStateException(
-        s"index tier exists at ${indexPath}_tier but has no mod stamp — " +
-          s"backfill ${indexPath}_tier_mod with the mod it was built with")).toInt
-      (t, mod)
-    }
-
-  // -- tier generation consolidation -----------------------------------
-
-  private def consolidateMarkerPath(tier: Path) = new Path(tier, "_consolidate_commit")
-
-  /** Fold all committed generations of a tier into ONE — every
-    * [[tierByKey]] run adds a `gen=` dir, so per-pb file count (and
-    * probe open cost) grows with maintenance cadence until folded.
-    * The new generation is built under a dot-prefixed scratch name
-    * (invisible to [[loadTier]] — readers keep seeing the old
-    * generations, complete, until the atomic rename), then renamed in
-    * and the sources dropped. A crash between rename and the source
-    * deletes leaves a DUPLICATION window, never a hole; maintenance
-    * runs between ingest sessions, and [[recoverConsolidation]]
-    * restores single-copy state before the next session reads.
-    * Safe alongside a concurrent [[tierByKey]] (it only ADDS new
-    * generations; consolidation touches only those it listed at
-    * claim time); exclusive against itself via the claim marker. */
-  def consolidateTier(spark: SparkSession, tierPath: String,
-      onPhase: String => Unit = _ => ()): Option[TierStats] = {
-    val tier = new Path(tierPath)
-    val fs = fsOf(spark, tier)
-    if (!fs.exists(tier)) return None
-    val committed = fs.listStatus(tier).toSeq
-      .filter(s => s.isDirectory && s.getPath.getName.startsWith("gen=") &&
-        fs.exists(new Path(s.getPath, "_SUCCESS")))
-      .map(_.getPath)
-    if (committed.size < 2) return None // nothing to fold
-
-    val runId = java.util.UUID.randomUUID().toString
-    val manifest = (Seq(runId) ++ committed.map(_.getName)).mkString("\n")
-    if (!Markers.tryCreate(fs, consolidateMarkerPath(tier), manifest))
-      throw new IllegalStateException(
-        s"tier $tierPath already has a consolidation in flight (or a dead " +
-          "one's marker) — run Compaction.recoverConsolidation, then retry")
-    val scratch = new Path(tier, s".consolidating-$runId")
-    try {
-      // pb rides along as a data column from partition discovery; no
-      // re-derivation (and no mod knowledge) needed
-      spark.read.option("basePath", tierPath)
-        .parquet(committed.map(_.toString): _*)
-        .drop("gen")
-        .repartition(col("pb"))
-        .write.partitionBy("pb").mode("errorifexists").parquet(scratch.toString)
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        if (fs.exists(scratch)) fs.delete(scratch, true)
-        fs.delete(consolidateMarkerPath(tier), false)
-        throw e
-    }
-    onPhase("built")
-    onPhase("swapping")
-    finishConsolidation(fs, tier, runId, committed.map(_.getName))
-    // footer row counts: bit-equal to a count() job, zero jobs
-    val rows = StoreSchemas.footerRowCount(fs,
-      spark.sessionState.newHadoopConf(), new Path(s"$tierPath/gen=$runId"))
-    Some(TierStats(runId, committed.size, rows))
-  }
-
-  private def finishConsolidation(fs: FileSystem, tier: Path, runId: String,
-      sourceNames: Seq[String]): Unit = {
-    val scratch = new Path(tier, s".consolidating-$runId")
-    val target = new Path(tier, s"gen=$runId")
-    if (fs.exists(scratch) && !fs.rename(scratch, target))
-      throw new IllegalStateException(
-        s"could not publish consolidated generation $scratch -> $target")
-    if (!fs.exists(new Path(target, "_SUCCESS")))
-      throw new IllegalStateException(
-        s"consolidation state lost on $tier: generation gen=$runId absent — " +
-          "restore from a store backup")
-    sourceNames.foreach { n =>
-      val p = new Path(tier, n)
-      if (fs.exists(p)) fs.delete(p, true)
-    }
-    fs.delete(consolidateMarkerPath(tier), false)
-  }
-
-  /** Resolve an interrupted [[consolidateTier]]: forward iff the new
-    * generation committed (in scratch or already renamed), else back.
-    * OPERATOR-invoked, same contract as [[recover]]. */
-  def recoverConsolidation(spark: SparkSession, tierPath: String): Boolean = {
-    val tier = new Path(tierPath)
-    val fs = fsOf(spark, tier)
-    Markers.read(fs, consolidateMarkerPath(tier)) match {
-      case None => false
-      case Some(manifest) =>
-        val lines = manifest.split("\n").toSeq
-        val (runId, sources) = (lines.head, lines.tail)
-        val scratch = new Path(tier, s".consolidating-$runId")
-        val target = new Path(tier, s"gen=$runId")
-        val built = fs.exists(new Path(scratch, "_SUCCESS")) ||
-          fs.exists(new Path(target, "_SUCCESS"))
-        if (built) finishConsolidation(fs, tier, runId, sources)
-        else {
-          if (fs.exists(scratch)) fs.delete(scratch, true)
-          fs.delete(consolidateMarkerPath(tier), false)
-        }
-        true
-    }
-  }
-
-  /** Resolve an interrupted [[tierByKey]]: forward (delete the moved
-    * sources, release) iff the generation committed; back (drop the
-    * partial generation, release, sources untouched) otherwise.
-    * OPERATOR-invoked, same contract as [[recover]]. */
-  def recoverTier(spark: SparkSession, storePath: String, tierPath: String): Boolean = {
-    val store = new Path(storePath)
-    val fs = fsOf(spark, store)
-    Markers.read(fs, tierMarkerPath(store)) match {
-      case None => false
-      case Some(manifest) =>
-        val lines = manifest.split("\n").toSeq
-        val (runId, sources) = (lines.head, lines.tail)
-        val genDir = new Path(s"$tierPath/gen=$runId")
-        if (fs.exists(new Path(genDir, "_SUCCESS")))
-          finishTierSwap(fs, store, sources)
-        else {
-          if (fs.exists(genDir)) fs.delete(genDir, true)
-          fs.delete(tierMarkerPath(store), false)
-        }
-        true
     }
   }
 

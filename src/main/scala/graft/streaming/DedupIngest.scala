@@ -2,9 +2,10 @@ package graft.streaming
 
 import graft.operators.Dedup
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
+import org.apache.spark.sql.types._
 
 /** Growing MinHash band store — dedup-on-ingest, the third index the
   * grow/consolidate/serve discipline covers (lexical postings via
@@ -16,20 +17,22 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * supplied the probe; this module makes its corpus-bands side a
   * store that grows forever and honors takedowns.
   *
-  * Relation to [[DocIngest]]: DocIngest is the STREAMING loop (match
-  * each micro-batch, persist pairs/docs/bands, replay-safe
-  * self-exclusion) over a flat `batch_id=` band forest — its own doc
-  * names the scale gap: the probe "partition-prunes nothing today".
-  * This module is that missing index side: consolidation into a
-  * pbh-partitioned generation forest, statically-pruned probes,
-  * tombstones, rebase. A DocIngest-shaped pipeline whose corpus has
-  * outgrown flat scans points its probe here.
+  * Streaming dedup-on-ingest ([[start]] / [[dedupBatch]]) is a
+  * foreachBatch adapter over the same store: each micro-batch probes
+  * the pruned forest plus the hot tail above the watermark, minus its
+  * own batch id, then writes its verified pairs, its docs and its
+  * bands, each into its own `batch_id=` partition — so a replayed
+  * batch changes nothing. Its consolidation must be capped below the
+  * stream checkpoint's replay watermark ([[consolidate]] refuses it
+  * uncapped): no generation ever holds a batch that can still
+  * replay.
   *
   * Layout (the [[PostingsIngest]] discipline end to end):
   *   - hot store `path/bands/batch_id=<id>/` — (doc_id, band, bh)
   *     minhash band rows per micro-batch through the exactly-once
   *     [[EventStreams.idempotentParquetSink]] (replays overwrite only
-  *     themselves); [[Compaction.compact]] may fold it below the
+  *     themselves), beside the adapter's `path/docs/` and
+  *     `path/pairs/`; [[Compaction.compact]] may fold them below the
   *     index watermark, never past it;
   *   - `indexPath/bands/gen=<through>/pbh=<p>/` — the band forest:
   *     each consolidation folds ONLY store batches newer than the
@@ -75,16 +78,58 @@ object DedupIngest {
     EventStreams.idempotentParquetSink(s"$path/bands")(
       Dedup.minhashBands(batch), batchId)
 
-  def start(docStream: DataFrame, path: String,
-      checkpointDir: String): StreamingQuery =
+  private val PairsSchema = StructType(Seq(
+    StructField("new_id", LongType), StructField("corpus_id", LongType),
+    StructField("jaccard", DoubleType)))
+
+  /** One step of the streaming dedup-on-ingest contract: pairs of
+    * `batch` against every doc ingested by an EARLIER batch — the
+    * pruned forest plus the hot tail, both minus this batch id — then
+    * idempotent appends of the pairs, the docs and the bands. A replay
+    * (same batchId) overwrites only its own partitions and never
+    * matches itself. */
+  def dedupBatch(batch: DataFrame, batchId: Long, path: String,
+      indexPath: String, minJaccard: Double): Unit = {
+    val s = batch.sparkSession
+    // the batch feeds banding, verification and the docs append — pin
+    // it so the stream source is consumed once
+    val b = graft.core.Materialize.pin(graft.core.Fanout.bySize(batch, col("doc_id")))
+    val bands = graft.core.Materialize.pin(Dedup.minhashBands(b))
+    val docs = new Path(path, "docs")
+    val prior = GenForest.numberedDirs(GenForest.fsOf(s, docs), docs,
+      GenForest.BatchDir).exists(_._1 != batchId)
+    val pairs =
+      if (!prior) s.createDataFrame(s.sparkContext.emptyRDD[Row], PairsSchema)
+      else {
+        val forest = corpusBandsFromIndex(s, indexPath, bands)
+        val corpusBands = GenForest.hotTail(s, path, indexPath, layout, batchId)
+          .fold(forest)(t => forest.unionByName(GenForest.hide(t,
+            GenForest.tombstones(s, indexPath, layout), "doc_id")))
+        val corpus = s.read.parquet(docs.toString)
+          .filter(col("batch_id") =!= batchId).select("doc_id", "text")
+        Dedup.minhashLshIncrementalIndexed(b, corpus, corpusBands, minJaccard,
+          newBandsIn = Some(bands))
+      }
+    EventStreams.idempotentParquetSink(s"$path/pairs")(pairs, batchId)
+    EventStreams.idempotentParquetSink(docs.toString)(b, batchId)
+    EventStreams.idempotentParquetSink(s"$path/bands")(bands, batchId)
+  }
+
+  /** Start the dedup-on-ingest stream ([[dedupBatch]] per micro-batch).
+    * `docStream` must carry at least (doc_id, text); extra columns ride
+    * along into the docs store. Maintain the store with the same
+    * `checkpointDir` so consolidation stays below its replay
+    * watermark. */
+  def start(docStream: DataFrame, path: String, indexPath: String,
+      checkpointDir: String, minJaccard: Double = 0.5): StreamingQuery =
     docStream.writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch((batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, path))
+        dedupBatch(batch, batchId, path, indexPath, minJaccard))
       .start()
 
   private val layout = GenForest.Layout("DedupIngest",
-    hot = Seq("bands"), hotSchema = StoreSchemas.bandsBatch,
+    hot = Seq("bands", "docs", "pairs"), hotSchema = StoreSchemas.bandsBatch,
     forest = "bands", forestSchema = StoreSchemas.bandsForest,
     partitionCol = "pbh", idCol = "doc_id", modStamp = Some("_pbh_mod"),
     srcGens = false, rowTombstones = false,
@@ -145,11 +190,25 @@ object DedupIngest {
     * pbh-partitioned band forest, through the shared
     * [[GenForest.consolidate]] lifecycle — no dictionary and no stats
     * here (bands carry no corpus-level statistics), so the phase list
-    * is shorter: gen build, size stamp, watermark. */
+    * is shorter: gen build, size stamp, watermark. A store a stream
+    * writes passes its `checkpointDir`: consolidation then stops below
+    * the stream's replay watermark.
+    *
+    * The [[start]] adapter's store (the only one with a `docs/` root)
+    * is refused without it: it can hold a batch that landed but was
+    * not committed. Folded, that batch's replay would match its own
+    * rows; landed only up to its docs, it would get a watermark above
+    * bands it has not written yet, which no later run folds. */
   def consolidate(spark: SparkSession, path: String, indexPath: String,
-      pbhMod: Int = 64): Unit =
+      pbhMod: Int = 64, checkpointDir: Option[String] = None): Unit = {
+    val docs = new Path(path, "docs")
+    require(checkpointDir.nonEmpty || !GenForest.fsOf(spark, docs).exists(docs),
+      s"store at $path is written by the dedup-on-ingest stream: pass " +
+        "its checkpointDir so consolidation stays below the stream's " +
+        "replay watermark")
     GenForest.consolidate(spark, path, indexPath, layout, pbhMod,
-      beforeWatermark = stampBytes)
+      beforeWatermark = stampBytes, checkpointDir = checkpointDir)
+  }
 
   /** Major compaction via the shared [[GenForest.purge]] lifecycle: fold
     * the band forest to one generation; a purge (unpurged tombstones) is
@@ -255,11 +314,13 @@ object DedupIngest {
     * the purging rebase is O(live forest), serve-side hiding is
     * immediate regardless, so k > 1 trades only physical-deletion
     * latency; post-maintain tombstone dirs <= 2k-1), compact the hot
-    * store below the watermark. */
+    * stores below the watermark. `checkpointDir`: see [[consolidate]]. */
   def maintain(spark: SparkSession, path: String, indexPath: String,
-      rebaseAtGens: Int = 8, purgeAtBatches: Int = 1): Unit =
+      rebaseAtGens: Int = 8, purgeAtBatches: Int = 1,
+      checkpointDir: Option[String] = None): Unit =
     GenForest.maintain(spark, path, indexPath, layout, rebaseAtGens,
-      purgeAtBatches, () => consolidate(spark, path, indexPath),
+      purgeAtBatches,
+      () => consolidate(spark, path, indexPath, checkpointDir = checkpointDir),
       () => rebase(spark, indexPath))
 
   // ---- driver gate row ------------------------------------------------

@@ -7,11 +7,16 @@ import org.apache.spark.sql.types.StructType
 
 /** The lifecycle kernel of the `gen=` generation-forest stores — the
   * postings forest ([[PostingsIngest]], pb-partitioned), the ANN codes
-  * forest ([[AnnIngest]], cell-partitioned) and the dedup band forest
-  * ([[DedupIngest]], pbh-partitioned). Every store runs the SAME
+  * forest ([[AnnIngest]], cell-partitioned), the dedup band forest
+  * ([[DedupIngest]], pbh-partitioned) and the LSH bucket forest
+  * ([[VecIngest]], pb-partitioned). Every store runs the SAME
   * hardened lifecycle, defined once here:
   *   - hot-batch visibility and the stamped consolidation watermark
-  *     (`_through`, [[consolidatedThrough]]);
+  *     (`_through`, [[consolidatedThrough]]); the hot tail above it
+  *     ([[hotTail]]) is what a probe reads beside the forest;
+  *   - for stores a stream writes, consolidation capped below the
+  *     stream checkpoint's replay watermark, so a batch that can still
+  *     replay never enters a generation;
   *   - the `_consolidate_commit` lease ([[withLease]]) every mutating
   *     phase takes, takedown writes included;
   *   - the tombstone state probe ([[tombState]]: tombstone batches on
@@ -242,6 +247,29 @@ object GenForest {
       .parquet(batches.map(_._2.toString): _*)
       .drop("batch_id")
 
+  /** The id every hot batch at or below is already folded: the stamped
+    * watermark, or the highest generation on disk when a consolidation
+    * crashed after its gen rename and before its watermark write. */
+  private def genFloor(fs: FileSystem, idx: Path, layout: Layout,
+      wm: Long): Long =
+    math.max(wm, numberedDirs(fs, new Path(idx, layout.forest), GenDir)
+      .map(_._1).maxOption.getOrElse(-1L))
+
+  /** The hot head root's rows no generation holds yet — the batches
+    * above the consolidation floor — minus the in-flight batch
+    * `exclude`: a replayed batch whose first attempt already landed
+    * must not match itself. None when no such batch exists. A probe
+    * reads this beside the (pruned) forest. */
+  private[streaming] def hotTail(spark: SparkSession, path: String,
+      indexPath: String, layout: Layout, exclude: Long): Option[DataFrame] = {
+    val idx = new Path(indexPath)
+    val fs = fsOf(spark, idx)
+    val floor = genFloor(fs, idx, layout, longMarker(fs, idx, "_through").getOrElse(-1L))
+    val tail = numberedDirs(fs, new Path(s"$path/${layout.hot.head}"), BatchDir)
+      .filter { case (id, _) => id > floor && id != exclude }
+    if (tail.isEmpty) None else Some(readHot(spark, path, layout, tail))
+  }
+
   /** Offline maintenance, INCREMENTAL: fold only hot batches newer than
     * the stamped watermark into exactly one new `gen=<through>`
     * generation; prior gens stay byte-untouched.
@@ -263,15 +291,25 @@ object GenForest {
     * `beforeWatermark` runs after the install (the postings sidecar
     * reconcile, the dedup size stamp). `mod` is checked against — or
     * stamped as — the layout's structural `modStamp`: gens already on
-    * disk were hashed with it. */
+    * disk were hashed with it.
+    *
+    * `checkpointDir`: the checkpoint of the stream that writes the hot
+    * store. Consolidation then stops below its replay watermark
+    * ([[Compaction.safeBelowFromCheckpoint]]): a batch that can still
+    * replay never enters a generation, so its replay — which probes
+    * the forest — never matches its own rows. None = no cap. */
   private[streaming] def consolidate(spark: SparkSession, path: String,
       indexPath: String, layout: Layout, mod: Int = 0,
       underLease: (FileSystem, Path, Seq[(Long, Path)]) => Unit = (_, _, _) => (),
       encode: DataFrame => DataFrame = identity,
-      beforeWatermark: (FileSystem, Path) => Unit = (_, _) => ()): Unit = {
+      beforeWatermark: (FileSystem, Path) => Unit = (_, _) => (),
+      checkpointDir: Option[String] = None): Unit = {
     val idx = new Path(indexPath)
     val fs = fsOf(spark, idx)
-    val hot = layout.hot.map(h => numberedDirs(fs, new Path(s"$path/$h"), BatchDir))
+    val below = checkpointDir.fold(Long.MaxValue)(
+      Compaction.safeBelowFromCheckpoint(spark, _))
+    val hot = layout.hot.map(h =>
+      numberedDirs(fs, new Path(s"$path/$h"), BatchDir).filter(_._1 < below))
     val allIds = hot.flatten.map(_._1).distinct
     if (allIds.isEmpty) return
     val through = allIds.max
@@ -295,8 +333,7 @@ object GenForest {
       s"index at $indexPath has rebase recovery state pending — run " +
         s"${layout.owner}.rebase to settle it before consolidating")
     requireNoLegacyRecoveryDirs(fs, idx)
-    val floor = math.max(prev,
-      numberedDirs(fs, genRoot, GenDir).map(_._1).maxOption.getOrElse(-1L))
+    val floor = genFloor(fs, idx, layout, prev)
     val newBatches = hot.head.filter(_._1 > floor).sortBy(_._1)
     fs.mkdirs(idx)
     layout.modStamp.foreach { name =>
@@ -304,8 +341,9 @@ object GenForest {
       if (!graft.core.Markers.tryCreate(fs, stamp, mod.toString)) {
         val stamped = graft.core.Markers.read(fs, stamp).get.toInt
         require(stamped == mod,
-          s"index at $indexPath was built with ${name.drop(1)}=$stamped; an " +
-            s"incremental run cannot switch to $mod — rebuild the index")
+          s"index at $indexPath was built with ${name.drop(1)}=$stamped " +
+            s"(partition key mod $stamped); an incremental run cannot " +
+            s"switch to mod $mod — rebuild the index")
       }
     }
     withLease(fs, idx, through.toString) {

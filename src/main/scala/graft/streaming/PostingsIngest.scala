@@ -8,7 +8,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
 /** Growing BM25 store — the continuous form of
   * [[graft.operators.IndexStore.buildPostingsIndex]] (fresh crawl
   * batches join the searchable corpus forever, the retrieval twin of
-  * [[DocIngest]]'s near-dup flow).
+  * [[DedupIngest]]'s near-dup flow).
   *
   * Each micro-batch of (doc_id, text):
   *   1. appends its postings (doc_id, tok, tf, dl) into the store's

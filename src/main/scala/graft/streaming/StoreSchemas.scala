@@ -117,6 +117,18 @@ object StoreSchemas {
     StructField("doc_id", LongType), StructField("band", IntegerType),
     StructField("bh", LongType), StructField("batch_id", LongType)))
 
+  /** Hot LSH bucket store batches (`store/buckets/batch_id=N`,
+    * [[VecIngest.ingestBatch]]). */
+  val bucketsBatch: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("tbl", IntegerType),
+    StructField("bucket", IntegerType), StructField("batch_id", LongType)))
+
+  /** Consolidated LSH bucket forest (`index/buckets/gen=G/pb=P`). */
+  val bucketsForest: StructType = StructType(Seq(
+    StructField("vec_id", LongType), StructField("tbl", IntegerType),
+    StructField("bucket", IntegerType), StructField("gen", LongType),
+    StructField("pb", IntegerType)))
+
   /** Consolidated band forest (`index/bands/gen=G/pbh=P`). */
   val bandsForest: StructType = StructType(Seq(
     StructField("doc_id", LongType), StructField("band", IntegerType),

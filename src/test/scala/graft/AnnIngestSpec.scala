@@ -433,4 +433,93 @@ class AnnIngestSpec extends SparkSpec {
     }
     assert(e.getMessage.contains("frozen quantizer"))
   }
+
+  private def dirCount(path: String, prefix: String): Int = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    if (!fs.exists(p)) 0
+    else fs.listStatus(p).count(s =>
+      s.isDirectory && s.getPath.getName.startsWith(prefix))
+  }
+
+  test("ANN maintain bounds gens, hot store, AND tombstone dirs across " +
+      "a long blind-timer loop; takedowns stay permanent; serve exact") {
+    val base = tmp("r18-ann")
+    val store = s"$base/store"
+    val idx = s"$base/idx"
+    val nVecs = 60
+    val dim = 8
+    def vec(id: Long) = spark.range(id, id + 1).select(
+      col("id").as("vec_id"),
+      expr(s"transform(sequence(0, ${dim - 1}), " +
+        "i -> cast(sin(id * 13 + i * 7) as float))").as("embedding"))
+    val all = spark.range(nVecs).select(
+      col("id").as("vec_id"),
+      expr(s"transform(sequence(0, ${dim - 1}), " +
+        "i -> cast(sin(id * 13 + i * 7) as float))").as("embedding"))
+
+    val rebaseAtGens = 3
+    val cycles = 12
+    val dead = scala.collection.mutable.Set.empty[Long]
+    for (c <- 0 until cycles) {
+      // 5 vectors per cycle, a takedown of an already-served vector
+      // every third cycle — the blind scheduler's steady state
+      val ids = (c * 5 until (c + 1) * 5).map(_.toLong)
+      AnnIngest.ingestBatch(
+        all.filter(col("vec_id").isin(ids.map(Long.box): _*)), c.toLong, store)
+      if (c % 3 == 2) {
+        val victim = (c * 5 - 3).toLong
+        AnnIngest.tombstone(Seq(victim).toDF("vec_id"), c.toLong, idx)
+        dead += victim
+      }
+      AnnIngest.maintain(spark, store, idx, rebaseAtGens = rebaseAtGens)
+      // bounded-dirs is the CONTRACT, not an end-state accident:
+      // assert it every cycle
+      assert(dirCount(s"$idx/index", "gen=") <= rebaseAtGens + 1,
+        s"cycle $c: gen dirs exceed rebaseAtGens+1")
+      // tiered compaction: a class merges only at `fanout` (4) dirs,
+      // so the post-maintain count stays below fanout per size class
+      // (these toy batches all share class 0)
+      assert(dirCount(s"$store/vecs", "batch_id=") <= 4,
+        s"cycle $c: hot store dirs not tier-compacted below the watermark")
+      // tombstone batch dirs: folded into the snapshot at or below the
+      // purge stamp, so at most the takedowns since the last purge
+      assert(dirCount(s"$idx/tombstones", "batch_id=") <= 3,
+        s"cycle $c: tombstone dirs unbounded")
+      // snapshot versions: keep-two-back retention
+      assert(dirCount(s"$idx/tombstones_snapshot", "v=") <= 2,
+        s"cycle $c: snapshot versions unbounded")
+    }
+    assert(AnnIngest.consolidatedThrough(spark, idx).contains((cycles - 1).toLong))
+    // takedowns stayed permanent through every fold: no dead vector
+    // serves, and the grown path equals the generic search over the
+    // survivors (the AnnIngestProps equivalence, at loop horizon)
+    val (centroids, books) = AnnIngest.loadQuantizer(spark, idx)
+    val grown = AnnIngest.searchGrown(all, spark, idx, nQueries = 3, k = 4)
+    assert(grown.filter(col("neighbor_id").isin(dead.toSeq.map(Long.box): _*))
+      .isEmpty, "a tombstoned vector resurfaced after tombstone-dir folding")
+    val idxDf = spark.read.parquet(s"$idx/index")
+      .select("vec_id", "cell", "codes")
+      .filter(!col("vec_id").isin(dead.toSeq.map(Long.box): _*))
+    val generic = Similarity.ivfPqSearch(all, idxDf, centroids, books,
+      nQueries = 3, k = 4)
+    assert(grown.orderBy("query_id", "rank").collect().toSeq.map(_.toString) ==
+      generic.orderBy("query_id", "rank").collect().toSeq.map(_.toString))
+    // a re-ingest of a dead id stays dead (takedown is forever) even
+    // though its tombstone batch dir was folded away
+    val victim = dead.head
+    AnnIngest.ingestBatch(vec(victim), cycles.toLong, store)
+    AnnIngest.maintain(spark, store, idx, rebaseAtGens = rebaseAtGens)
+    assert(spark.read.parquet(s"$idx/index")
+      .filter(col("vec_id") === victim).isEmpty,
+      "a folded tombstone lost its encode-skip force")
+    // a takedown aimed at a covered (folded) batch id would be
+    // invisible to every reader — the write refuses loudly instead
+    val covers = graft.streaming.TombstoneStore.coveredThrough(spark, idx)
+    assert(covers >= 0, "the loop must have folded at least one takedown")
+    val e = intercept[IllegalArgumentException] {
+      AnnIngest.tombstone(Seq(1L).toDF("vec_id"), covers, idx)
+    }
+    assert(e.getMessage.contains("fresh"))
+  }
 }

@@ -72,56 +72,6 @@ object CompactionProps extends Properties("graft.compaction") {
       contents(store) == before && tailAfter == tailDirs
     }
 
-  property("tier: moved ∪ tail == original on random layouts; >= safeBelow untouched") =
-    forAll(layoutGen) { case (sizes, safeBelow) =>
-      val store = mkStore(sizes)
-      val tierP = s"$store-tier"
-      val before = contents(store)
-      graft.streaming.Compaction.tierByKey(spark, store, tierP, safeBelow.toLong,
-        org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.col("v"),
-          org.apache.spark.sql.functions.lit(8)))
-      import spark.implicits._
-      val tiered = graft.streaming.Compaction.loadTier(spark, tierP)
-        .map(_.select("id", "v").as[(Long, Long)].collect().toSeq)
-        .getOrElse(Seq.empty)
-      val tail = contents(store)
-      val tailIds = fs.listStatus(new Path(store))
-        .map(_.getPath.getName).filter(_.startsWith("batch_id="))
-        .map(_.stripPrefix("batch_id=").toLong)
-      (tiered.map(_.toString) ++ tail.map(_.toString)).sorted ==
-        before.map(_.toString).sorted && tailIds.forall(_ >= safeBelow)
-    }
-
-  property("tier crash at a random phase + recover == never crashed") =
-    forAll(layoutGen, Gen.oneOf("built", "swapping")) {
-      case ((sizes, safeBelow), crashAt) =>
-        val store = mkStore(sizes)
-        val tierP = s"$store-tier"
-        val before = contents(store)
-        val crashed =
-          try {
-            graft.streaming.Compaction.tierByKey(spark, store, tierP,
-              safeBelow.toLong,
-              org.apache.spark.sql.functions.pmod(
-                org.apache.spark.sql.functions.col("v"),
-                org.apache.spark.sql.functions.lit(8)),
-              onPhase = p => if (p == crashAt) throw new RuntimeException("die"))
-            false
-          } catch { case e: RuntimeException if e.getMessage == "die" => true }
-        if (crashed) graft.streaming.Compaction.recoverTier(spark, store, tierP)
-        graft.streaming.Compaction.tierByKey(spark, store, tierP, safeBelow.toLong,
-          org.apache.spark.sql.functions.pmod(
-            org.apache.spark.sql.functions.col("v"),
-            org.apache.spark.sql.functions.lit(8)))
-        import spark.implicits._
-        val tiered = graft.streaming.Compaction.loadTier(spark, tierP)
-          .map(_.select("id", "v").as[(Long, Long)].collect().toSeq)
-          .getOrElse(Seq.empty)
-        (tiered.map(_.toString) ++ contents(store).map(_.toString)).sorted ==
-          before.map(_.toString).sorted
-    }
-
   // ---- size-tiered compaction (r19, VERDICT r18 #5) --------------------
 
   // recompute the engine's geometric size class from outside: smallest

@@ -109,22 +109,6 @@ class CompactionSpec extends SparkSpec {
     assert(e.getMessage.contains("in flight"))
   }
 
-  test("compact and tier refuse to run over each other's in-flight marker") {
-    val store = tmp("compact-crossop")
-    mkStore(store, 4)
-    Markers.tryCreate(fs, new Path(s"$store/_tier_commit"), "other\nbatch_id=0")
-    val e1 = intercept[IllegalStateException] {
-      Compaction.compact(spark, store, safeBelow = 4)
-    }
-    assert(e1.getMessage.contains("tiering run in flight"))
-    fs.delete(new Path(s"$store/_tier_commit"), false)
-    Markers.tryCreate(fs, new Path(s"$store/_compact_commit"), "other\n0\nbatch_id=0")
-    val e2 = intercept[IllegalStateException] {
-      Compaction.tierByKey(spark, store, s"$store-tier", 4L, pmod(col("v"), lit(8)))
-    }
-    assert(e2.getMessage.contains("compaction in flight"))
-  }
-
   test("a failed build releases the claim and leaves the store usable") {
     val store = tmp("compact-buildfail")
     mkStore(store, 4)
@@ -217,267 +201,6 @@ class CompactionSpec extends SparkSpec {
     assert(Compaction.recover(spark, store))
     assert(contents(store) == before)
     assert(partDirs(store) == Set("batch_id=0", "batch_id=4", "batch_id=5"))
-  }
-
-  test("VecIngest stores compact at the checkpoint watermark and the stream resumes over them") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.VecIngest
-    implicit val sqlCtx = spark.sqlContext
-    def vec(seed: Int, wobble: Float = 0f): Seq[Float] =
-      Seq.tabulate(16)(d => math.sin(seed * 31 + d * 7).toFloat +
-        (if (d == 0) wobble else 0f))
-    val root = tmp("compact-vingest").stripSuffix("/store")
-    val (vecsP, idxP, pairsP, ckpt) =
-      (s"$root/vecs", s"$root/index", s"$root/pairs", s"$root/ckpt")
-    // ONE MemoryStream across both query incarnations: the source's
-    // offsets must outlive the query for a checkpointed restart (a
-    // fresh MemoryStream would rewind to offset 0 below the commit log)
-    val input = MemoryStream[(Long, Seq[Float])]
-    def stream() = VecIngest.start(input.toDF().toDF("vec_id", "embedding"),
-      vecsP, idxP, pairsP, ckpt, minSim = 0.99)
-    val q1 = stream()
-    try {
-      input.addData((1L, vec(1)), (2L, vec(99))); q1.processAllAvailable()
-      input.addData((3L, vec(1, 0.01f))); q1.processAllAvailable()
-      input.addData((4L, vec(1, -0.01f))); q1.processAllAvailable()
-    } finally q1.stop()
-    val pairsBefore = spark.read.parquet(pairsP)
-      .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
-    assert(pairsBefore == Set((3L, 1L), (4L, 1L), (4L, 3L)))
-
-    // all three committed batches fold into one segment per store
-    assert(Compaction.safeBelowFromCheckpoint(spark, ckpt) == 3L)
-    val stats = VecIngest.compactStores(spark, vecsP, idxP, pairsP, ckpt)
-    assert(stats("vecs").get.batchesMerged == 3)
-    assert(stats("index").get.batchesMerged == 3)
-    assert(stats("pairs").get.batchesMerged == 2, "batch 0 wrote no pairs")
-    assert(spark.read.parquet(vecsP).count() == 4)
-    assert(spark.read.parquet(pairsP).select("new_id", "corpus_id")
-      .as[(Long, Long)].collect().toSet == pairsBefore)
-
-    // the stream restarts over the compacted stores: next batch is 3
-    // (never a compacted id) and probes the segment like any corpus
-    val q2 = stream()
-    try {
-      input.addData((5L, vec(1, 0.02f))); q2.processAllAvailable()
-    } finally q2.stop()
-    val pairsAfter = spark.read.parquet(pairsP)
-      .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
-    assert(pairsAfter == pairsBefore ++ Set((5L, 1L), (5L, 3L), (5L, 4L)),
-      s"resumed batch must match against the COMPACTED index, got $pairsAfter")
-    assert(spark.read.parquet(vecsP).count() == 5, "no duplicated vectors")
-  }
-
-  test("tiered index store: matching is unchanged, the tail empties, resume still pairs") {
-    import graft.streaming.VecIngest
-    def vec(seed: Int, wobble: Float = 0f): Seq[Float] =
-      Seq.tabulate(16)(d => math.sin(seed * 31 + d * 7).toFloat +
-        (if (d == 0) wobble else 0f))
-    val root = tmp("compact-tier").stripSuffix("/store")
-    val (vecsP, idxP, pairsP) = (s"$root/vecs", s"$root/index", s"$root/pairs")
-    def ingest(id: Long, batch: Long, w: Float): Unit =
-      VecIngest.ingestBatch(Seq((id, vec(1, w))).toDF("vec_id", "embedding"),
-        batch, vecsP, idxP, pairsP, 0.99)
-    VecIngest.ingestBatch(
-      Seq((1L, vec(1)), (2L, vec(99))).toDF("vec_id", "embedding"),
-      0L, vecsP, idxP, pairsP, 0.99)
-    ingest(3L, 1L, 0.01f)
-    ingest(4L, 2L, -0.01f)
-    def pairs = spark.read.parquet(pairsP)
-      .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((3L, 1L), (4L, 1L), (4L, 3L)))
-
-    // a checkpoint that committed batches 0..2
-    val ckpt = s"$root/ckpt"
-    fs.mkdirs(new Path(s"$ckpt/commits"))
-    for (i <- 0 to 2) Markers.tryCreate(fs, new Path(s"$ckpt/commits/$i"), "{}")
-    val stats = VecIngest.tierIndexStore(spark, idxP, ckpt).get
-    assert(stats.batchesMoved == 3)
-    assert(!fs.listStatus(new Path(idxP)).exists(
-      _.getPath.getName.startsWith("batch_id=")), "tail must be empty")
-    val tier = Compaction.loadTier(spark, s"${idxP}_tier").get
-    assert(tier.select("vec_id").distinct().count() == 4)
-    assert(tier.columns.contains("pb"), "tier is laid out by the pruning key")
-
-    // the next batch probes THROUGH the tier: same near-dup direction
-    // must still pair with everything, via pb-pruned tier + empty tail
-    ingest(5L, 3L, 0.02f)
-    assert(pairs == Set((3L, 1L), (4L, 1L), (4L, 3L),
-      (5L, 1L), (5L, 3L), (5L, 4L)),
-      s"tiered probe must find all prior near-dups, got $pairs")
-    // replaying the post-tier batch stays a no-op
-    ingest(5L, 3L, 0.02f)
-    assert(pairs.count(_._1 == 5L) == 3)
-
-    // the layout mod is a store-lifetime constant: a later maintenance
-    // run at a different mod would mis-prune every probe — fails loudly
-    for (i <- Seq(3)) Markers.tryCreate(fs, new Path(s"$ckpt/commits/$i"), "{}")
-    val e = intercept[IllegalArgumentException] {
-      VecIngest.tierIndexStore(spark, idxP, ckpt, pbMod = 64)
-    }
-    assert(e.getMessage.contains("mod 1024"))
-  }
-
-  test("tiered band index: DocIngest matching is unchanged after tiering") {
-    import graft.streaming.DocIngest
-    val base = (1 to 40).map(i => s"tok$i").mkString(" ")
-    val nearDup = (1 to 38).map(i => s"tok$i").mkString(" ") + " o1 o2"
-    val nearDup2 = (1 to 37).map(i => s"tok$i").mkString(" ") + " p1 p2 p3"
-    val root = tmp("compact-doctier").stripSuffix("/store")
-    val (docsP, idxP, pairsP) = (s"$root/docs", s"$root/index", s"$root/pairs")
-    DocIngest.ingestBatch(Seq((1L, base)).toDF("doc_id", "text"),
-      0L, docsP, idxP, pairsP, 0.5)
-    DocIngest.ingestBatch(Seq((3L, nearDup)).toDF("doc_id", "text"),
-      1L, docsP, idxP, pairsP, 0.5)
-    val ckpt = s"$root/ckpt"
-    fs.mkdirs(new Path(s"$ckpt/commits"))
-    for (i <- 0 to 1) Markers.tryCreate(fs, new Path(s"$ckpt/commits/$i"), "{}")
-    assert(DocIngest.tierIndexStore(spark, idxP, ckpt).get.batchesMoved == 2)
-    assert(!fs.listStatus(new Path(idxP)).exists(
-      _.getPath.getName.startsWith("batch_id=")), "band tail must be empty")
-    // next batch probes through the pruned tier and still finds both
-    DocIngest.ingestBatch(Seq((4L, nearDup2)).toDF("doc_id", "text"),
-      2L, docsP, idxP, pairsP, 0.5)
-    val pairs = spark.read.parquet(pairsP)
-      .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((3L, 1L), (4L, 1L), (4L, 3L)),
-      s"tiered band probe must find all prior near-dups, got $pairs")
-  }
-
-  test("tier crash at each phase recovers forward; a partial generation rolls back") {
-    val store = tmp("tier-crash")
-    mkStore(store, 4)
-    val before = contents(store)
-    val tierP = s"$store-tier"
-    // crash after build: marker durable, generation committed ->
-    // recovery rolls FORWARD and the tier holds exactly the store's rows
-    for (phase <- Seq("built", "swapping")) {
-      val s2 = tmp(s"tier-crash-$phase"); mkStore(s2, 4)
-      val t2 = s"$s2-tier"
-      val rows2 = contents(s2)
-      intercept[RuntimeException] {
-        Compaction.tierByKey(spark, s2, t2, 4L, pmod(col("v"), lit(8)), "pb",
-          onPhase = p => if (p == phase) throw new RuntimeException("die"))
-      }
-      assert(Compaction.recoverTier(spark, s2, t2))
-      assert(!fs.listStatus(new Path(s2)).exists(
-        _.getPath.getName.startsWith("batch_id=")))
-      val moved = Compaction.loadTier(spark, t2).get
-        .select("id", "v").as[(Long, Long)].collect().sorted.toSeq
-      assert(moved == rows2, s"tier content must equal the store's at $phase")
-    }
-    // a partial (uncommitted) generation rolls back: sources intact
-    val runId = "dead-run"
-    Markers.tryCreate(fs, new Path(s"$store/_tier_commit"),
-      (Seq(runId) ++ (0 to 3).map(b => s"batch_id=$b")).mkString("\n"))
-    fs.mkdirs(new Path(s"$tierP/gen=$runId/pb=0"))
-    assert(Compaction.recoverTier(spark, store, tierP))
-    assert(contents(store) == before, "rollback leaves the store intact")
-    assert(!fs.exists(new Path(s"$tierP/gen=$runId")))
-    assert(Compaction.loadTier(spark, tierP).isEmpty)
-    // and the store tiers cleanly afterwards
-    assert(Compaction.tierByKey(spark, store, tierP, 4L,
-      pmod(col("v"), lit(8))).nonEmpty)
-    assert(Compaction.loadTier(spark, tierP).get.count() == 160)
-  }
-
-  test("generations accumulate across tiering runs and load as one frame") {
-    val store = tmp("tier-gens")
-    val tierP = s"$store-tier"
-    mkStore(store, 2)
-    assert(Compaction.tierByKey(spark, store, tierP, 2L,
-      pmod(col("v"), lit(8))).get.batchesMoved == 2)
-    // two more batches arrive, second maintenance run
-    for (b <- 2 until 4)
-      graft.streaming.EventStreams.idempotentParquetSink(store)(
-        spark.range(b * 40, (b + 1) * 40)
-          .select(col("id"), (col("id") * 7 % 13).as("v")), b.toLong)
-    assert(Compaction.tierByKey(spark, store, tierP, 4L,
-      pmod(col("v"), lit(8))).get.batchesMoved == 2)
-    val tier = Compaction.loadTier(spark, tierP).get
-    assert(tier.select("gen").distinct().count() == 2)
-    assert(tier.select("id").as[Long].collect().sorted.toSeq ==
-      (0L until 160L).toSeq)
-  }
-
-  test("maintainStores runs the full runbook and the stream keeps pairing across cycles") {
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.streaming.VecIngest
-    implicit val sqlCtx = spark.sqlContext
-    def vec(seed: Int, wobble: Float = 0f): Seq[Float] =
-      Seq.tabulate(16)(d => math.sin(seed * 31 + d * 7).toFloat +
-        (if (d == 0) wobble else 0f))
-    val root = tmp("compact-maintain").stripSuffix("/store")
-    val (vecsP, idxP, pairsP, ckpt) =
-      (s"$root/vecs", s"$root/index", s"$root/pairs", s"$root/ckpt")
-    val input = MemoryStream[(Long, Seq[Float])]
-    def stream() = VecIngest.start(input.toDF().toDF("vec_id", "embedding"),
-      vecsP, idxP, pairsP, ckpt, minSim = 0.99)
-    def cycle(data: (Long, Seq[Float])*): Unit = {
-      val q = stream()
-      try { input.addData(data: _*); q.processAllAvailable() } finally q.stop()
-    }
-    cycle((1L, vec(1)), (2L, vec(99)))
-    cycle((3L, vec(1, 0.01f)))
-    val r1 = VecIngest.maintainStores(spark, vecsP, idxP, pairsP, ckpt)
-    assert(r1("index_tiered") == "2 batches" && r1("tier_folded") == "no-op")
-    // second session + second maintenance: new batch tiers in, two
-    // generations fold to one, and matching still spans everything
-    cycle((4L, vec(1, -0.01f)))
-    val r2 = VecIngest.maintainStores(spark, vecsP, idxP, pairsP, ckpt)
-    assert(r2("index_tiered") == "1 batches" && r2("tier_folded") == "2 generations")
-    cycle((5L, vec(1, 0.02f)))
-    val pairs = spark.read.parquet(pairsP)
-      .select("new_id", "corpus_id").as[(Long, Long)].collect().toSet
-    assert(pairs == Set((3L, 1L), (4L, 1L), (4L, 3L),
-      (5L, 1L), (5L, 3L), (5L, 4L)),
-      s"matching must survive two maintenance cycles, got $pairs")
-  }
-
-  test("consolidateTier folds generations to one, content-neutral, crash-safe") {
-    def mkTiered(tag: String): (String, String, Seq[(Long, Long)]) = {
-      val store = tmp(tag)
-      val tierP = s"$store-tier"
-      mkStore(store, 2)
-      Compaction.tierByKey(spark, store, tierP, 2L, pmod(col("v"), lit(8)))
-      for (b <- 2 until 4)
-        graft.streaming.EventStreams.idempotentParquetSink(store)(
-          spark.range(b * 40, (b + 1) * 40)
-            .select(col("id"), (col("id") * 7 % 13).as("v")), b.toLong)
-      Compaction.tierByKey(spark, store, tierP, 4L, pmod(col("v"), lit(8)))
-      val rows = Compaction.loadTier(spark, tierP).get
-        .select("id", "v").as[(Long, Long)].collect().sorted.toSeq
-      (store, tierP, rows)
-    }
-    // clean fold: 2 gens -> 1, same rows, fewer (or equal) files per pb
-    val (_, tierP, rows) = mkTiered("consolidate")
-    val stats = Compaction.consolidateTier(spark, tierP).get
-    assert(stats.batchesMoved == 2, "two generations folded")
-    val after = Compaction.loadTier(spark, tierP).get
-    assert(after.select("gen").distinct().count() == 1)
-    assert(after.select("id", "v").as[(Long, Long)]
-      .collect().sorted.toSeq == rows)
-    assert(Compaction.consolidateTier(spark, tierP).isEmpty,
-      "a single generation is a no-op")
-
-    // crash at each phase, recover, content identical
-    for (phase <- Seq("built", "swapping")) {
-      val (_, t2, rows2) = mkTiered(s"consolidate-$phase")
-      intercept[RuntimeException] {
-        Compaction.consolidateTier(spark, t2,
-          onPhase = p => if (p == phase) throw new RuntimeException("die"))
-      }
-      // pre-recovery readers still see complete data (the scratch
-      // build is invisible; at worst sources are still all present)
-      val mid = Compaction.loadTier(spark, t2).get
-        .select("id", "v").as[(Long, Long)].collect().sorted.toSeq
-      assert(mid == rows2, s"readers mid-crash must see complete data at $phase")
-      assert(Compaction.recoverConsolidation(spark, t2))
-      val rec = Compaction.loadTier(spark, t2).get
-      assert(rec.select("gen").distinct().count() == 1)
-      assert(rec.select("id", "v").as[(Long, Long)]
-        .collect().sorted.toSeq == rows2, s"recovered content differs at $phase")
-    }
   }
 
   test("compactTiered merges only full size classes, preserves content, " +

@@ -3,6 +3,7 @@ package graft
 import graft.functions.{CosineSimilarity, TopK}
 import graft.operators.Similarity
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.classic.GraftColumnBridge
 
 class FunctionsSpec extends SparkSpec {
   import spark.implicits._
@@ -258,5 +259,34 @@ class FunctionsSpec extends SparkSpec {
         .bloomMightContain(bf, col("i"))).collect()
     }
     assert(err.getMessage.toLowerCase.contains("bloom_might_contain"))
+  }
+
+  test("bridge refuses an unverified Spark loudly, naming versions and remedy") {
+    assert(GraftColumnBridge.VerifiedSparkVersions.contains(
+      org.apache.spark.SPARK_VERSION),
+      "the running Spark must itself be on the verified list — " +
+        "re-verify the bridge and update VerifiedSparkVersions")
+    try {
+      GraftColumnBridge.versionOverrideForTest = Some("9.9.9-unverified")
+      val e = intercept[IllegalStateException] {
+        GraftColumnBridge.column(
+          org.apache.spark.sql.catalyst.expressions.Literal(1))
+      }
+      assert(e.getMessage.contains("9.9.9-unverified"))
+      assert(e.getMessage.contains("4.1.2"))
+      assert(e.getMessage.contains("VerifiedSparkVersions"))
+      assert(e.getMessage.contains("allowUnverifiedSpark"))
+      // the documented opt-out downgrades the refusal to a warning
+      sys.props("graft.bridge.allowUnverifiedSpark") = "true"
+      try {
+        val c = GraftColumnBridge.column(
+          org.apache.spark.sql.catalyst.expressions.Literal(1))
+        assert(spark.range(1).select(c.as("one")).collect().head.getInt(0) == 1)
+      } finally sys.props.remove("graft.bridge.allowUnverifiedSpark")
+    } finally GraftColumnBridge.versionOverrideForTest = None
+    // pin restored: the verified path works again with no opt-out set
+    val c = GraftColumnBridge.column(
+      org.apache.spark.sql.catalyst.expressions.Literal(2))
+    assert(spark.range(1).select(c.as("two")).collect().head.getInt(0) == 2)
   }
 }

@@ -118,4 +118,33 @@ class PlanGuardSpec extends SparkSpec {
       }
     }
   }
+
+  test("x_calibration_fold plans as one codegen'd scan->fold->agg with a " +
+      "single exchange — no joins, no extra shuffles, pruned scan") {
+    val df = graft.operators.Relational.queries("x_calibration_fold")(
+      spark, SfDir)
+    df.collect() // finalize the AQE plan so codegen spans are visible
+    // the AdaptiveSparkPlan string prints BOTH the final and the
+    // initial plan — assert over the final section only, or every
+    // node would count twice
+    val physical = df.queryExecution.executedPlan.toString
+      .split("== Initial Plan ==").head
+    assert(!physical.contains("Join"), "calibration row must not join")
+    val exchanges = "Exchange".r.findAllIn(physical).length
+    assert(exchanges == 1,
+      s"calibration row must shuffle exactly once (the 4-value partial-agg " +
+        s"merge); got $exchanges:\n$physical")
+    // column pruning reaches the scan: only the four seed key columns
+    val scan = df.queryExecution.executedPlan.collectLeaves().head.toString
+    assert(Seq("l_orderkey", "l_partkey", "l_suppkey", "l_linenumber")
+      .forall(scan.contains), s"scan must read the four seed columns: $scan")
+    assert(!scan.contains("l_extendedprice") && !scan.contains("l_comment"),
+      s"scan must prune non-seed columns: $scan")
+    // the fold is inside whole-stage codegen (an interpreted 32-step
+    // chain would measure expression-tree walking, not host CPU) —
+    // the simple plan string marks codegen'd operators with a *(n)
+    // stage prefix
+    assert("""\*\(\d+\) Project""".r.findFirstIn(physical).nonEmpty,
+      s"the fold Project must run inside whole-stage codegen:\n$physical")
+  }
 }

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -613,5 +614,204 @@ class PostingsIngestSpec extends SparkSpec {
     val oneShot = Retrieval.bm25TopK(alive)
       .orderBy("q_id", "rank").collect().toSeq
     assert(served == oneShot)
+  }
+
+  private val fs = new Path("/tmp").getFileSystem(
+    spark.sparkContext.hadoopConfiguration)
+
+  private def readIds(idx: String): Set[Long] =
+    TombstoneStore.read(spark, idx, "doc_id")
+      .map(_.as[Long].collect().toSet).getOrElse(Set.empty)
+
+  test("repeated takedown + purge + sidecarKeepLast folds serve the " +
+      "one-shot answer over the ingested survivors") {
+    import graft.operators.{IndexStore, Retrieval}
+    import graft.streaming.PostingsIngest
+    val base = tmp("r18-btimer")
+    val store = s"$base/store"
+    val idx = s"$base/idx"
+    // nDocs NOT divisible by cycles on purpose: integer division
+    // leaves straggler docs the loop never ingests, and the one-shot
+    // side must be scoped to the INGESTED corpus (the r18 soak's first
+    // run compared against the full frame — same docs, same ranks,
+    // every score shifted by the stragglers' n/sumdl/df)
+    val nDocs = 2500L
+    val cycles = 24
+    val perB = nDocs / cycles
+    val docs = spark.range(nDocs).select(
+      col("id").as("doc_id"),
+      expr("concat_ws(' ', transform(sequence(0, 39), " +
+        "i -> concat('w', pmod(id * 31 + i * 17, 2000))))").as("text"))
+    for (c <- 0 until cycles) {
+      PostingsIngest.ingestBatch(
+        docs.filter(col("doc_id") >= c * perB && col("doc_id") < (c + 1) * perB),
+        c.toLong, store)
+      if (c % 7 == 6)
+        PostingsIngest.tombstoneDocs(
+          spark.range(c * perB - 3, c * perB - 1).select(col("id").as("doc_id")),
+          c.toLong, idx)
+      PostingsIngest.maintain(spark, store, idx,
+        rebaseAtGens = 8, sidecarKeepLast = Some(2))
+      if (c % 10 == 9) { // as-of probe within the configured lag
+        val wm = PostingsIngest.consolidatedThrough(spark, idx).get
+        IndexStore.bm25FromIndex(docs.filter(col("doc_id") < (c + 1) * perB),
+            spark, idx, 4, 3, 5, asOfGen = Some(wm))
+          .write.format("noop").mode("overwrite").save()
+      }
+      // every dir population bounded PER CYCLE: gens by rebaseAtGens,
+      // sidecar gens by keepLast (+1 for the cycle's fresh delta),
+      // hot stores by the tiered class bound
+      assert(dirCount(s"$idx/postings", "gen=") <= 9,
+        s"cycle $c: postings gens exceed rebaseAtGens+1")
+      for (sc <- Seq("dict", "stats"))
+        assert(dirCount(
+          PostingsIngest.sidecarRootPath(spark, idx, sc), "gen=") <= 4,
+          s"cycle $c: $sc sidecar gens exceed keepLast+2")
+      for (hot <- Seq("postings", "stats"))
+        assert(dirCount(s"$store/$hot", "batch_id=") <= 8,
+          s"cycle $c: hot $hot dirs not tier-compacted")
+    }
+    val tombs = graft.streaming.TombstoneStore.readRows(spark, idx)
+      .get.select("doc_id").distinct()
+    val ingested = docs.filter(col("doc_id") < cycles * perB)
+    val alive = ingested.join(broadcast(tombs), Seq("doc_id"), "left_anti")
+    val served = IndexStore.bm25FromIndex(alive, spark, idx,
+        Retrieval.NQueries, Retrieval.QueryLen, Retrieval.K)
+      .orderBy("q_id", "rank").collect().toSeq
+    val oneShot = Retrieval.bm25TopK(alive)
+      .orderBy("q_id", "rank").collect().toSeq
+    assert(served == oneShot,
+      "the blind-timer loop horizon must serve the one-shot answer")
+  }
+
+  test("PostingsIngest.tombstoneDocs waits out a maintenance window " +
+      "under the same bounded budget, then records dl/gen as usual") {
+    val base = tmp("r20-pretry")
+    val store = s"$base/store"
+    val idx = s"$base/idx"
+    val docs = mkDocs(300L)
+    PostingsIngest.ingestBatch(docs, 0L, store)
+    PostingsIngest.consolidate(spark, store, idx)
+    val claim = new Path(idx, "_consolidate_commit")
+    graft.core.Markers.forceWrite(fs, claim, "live-run\nconsolidate 9")
+    val releaser = new Thread(() => {
+      Thread.sleep(400)
+      fs.delete(claim, false)
+    })
+    releaser.start()
+    try {
+      PostingsIngest.tombstoneDocs(Seq(42L).toDF("doc_id"), 1L, idx,
+        maxWaitMs = 15000L)
+    } finally releaser.join()
+    // the landed batch carries the forest-recorded dl (not null): the
+    // retry path went through the full guard + dl lookup
+    val row = spark.read.parquet(s"$idx/tombstones")
+      .filter(col("doc_id") === 42L).select("dl").as[Long].collect()
+    assert(row.length == 1 && row.head > 0L,
+      "the retried takedown must record its dl correction")
+    // and serving reflects it immediately
+    val alive = docs.filter(col("doc_id") =!= 42L)
+    val served = IndexStore.bm25FromIndex(alive, spark, idx,
+        Retrieval.NQueries, Retrieval.QueryLen, Retrieval.K)
+      .orderBy("q_id", "rank").collect().toSeq
+    val oneShot = Retrieval.bm25TopK(alive)
+      .orderBy("q_id", "rank").collect().toSeq
+    assert(served == oneShot)
+  }
+
+  test("purgeAtBatches defers the purging rebase until k batches are " +
+      "unpurged; serving stays bit-exact at every intermediate cycle and " +
+      "the dir tail is bounded by k + the deferred intake") {
+    val base = tmp("r20-amort")
+    val store = s"$base/store"
+    val idx = s"$base/idx"
+    val nDocs = 1200L
+    val cycles = 8
+    val perB = nDocs / cycles
+    val docs = mkDocs(nDocs)
+    val purgeAt = 3
+    val dead = scala.collection.mutable.Set.empty[Long]
+    def purgedStamp: Long = graft.core.Markers.read(fs,
+      new Path(idx, "_purged")).map(_.toLong).getOrElse(-1L)
+    var purges = 0
+    var lastStamp = -1L
+    for (c <- 0 until cycles) {
+      PostingsIngest.ingestBatch(
+        docs.filter(col("doc_id") >= c * perB && col("doc_id") < (c + 1) * perB),
+        c.toLong, store)
+      if (c > 0) {
+        PostingsIngest.tombstoneDocs(
+          Seq((c * perB - 2)).toDF("doc_id"), c.toLong, idx)
+        dead += c * perB - 2
+      }
+      // rebaseAtGens high enough that ONLY the tombstone trigger can
+      // fire a rebase in this loop
+      PostingsIngest.maintain(spark, store, idx,
+        rebaseAtGens = 20, purgeAtBatches = purgeAt)
+      val stamp = purgedStamp
+      if (stamp > lastStamp) { purges += 1; lastStamp = stamp }
+      // fewer than purgeAt unpurged batches must NOT advance the purge
+      // stamp — the deferral is the whole point; when it does advance,
+      // it covers everything landed so far. Takedowns land at cycles
+      // 1..7 with batch id c, so the trigger fires exactly at c=3
+      // (batches 1,2,3 unpurged) and c=6 (4,5,6)
+      val expectedStamp = if (c < 3) -1L else if (c < 6) 3L else 6L
+      assert(stamp == expectedStamp,
+        s"cycle $c: purge stamp $stamp, expected $expectedStamp")
+      // post-maintain bound = 2*purgeAt - 1: one fold's purgeAt-dir
+      // intake retired one fold late + up to purgeAt-1 fresh batches
+      // waiting for the next amortized purge
+      assert(dirCount(s"$idx/tombstones", "batch_id=") <= 2 * purgeAt - 1,
+        s"cycle $c: unpurged tail must stay bounded by purgeAtBatches")
+      assert(dirCount(s"$idx/tombstones_snapshot", "v=") <= 2)
+      // serve-side hiding + corrections are purge-independent: exact
+      // with unpurged batches pending (c=2: two unpurged, no snapshot;
+      // c=5: folded {1,2,3} + unpurged {4,5}, the mixed shape; c=7:
+      // two snapshot versions + a fresh tail batch)
+      if (c == 2 || c == 5 || c == 7) {
+        val ingested = docs.filter(col("doc_id") < (c + 1) * perB)
+        val alive = ingested.filter(
+          !col("doc_id").isin(dead.toSeq.map(Long.box): _*))
+        val served = IndexStore.bm25FromIndex(alive, spark, idx,
+            Retrieval.NQueries, Retrieval.QueryLen, Retrieval.K)
+          .orderBy("q_id", "rank").collect().toSeq
+        val oneShot = Retrieval.bm25TopK(alive)
+          .orderBy("q_id", "rank").collect().toSeq
+        assert(served == oneShot,
+          s"cycle $c: serving must be exact with unpurged batches pending")
+      }
+    }
+    // 7 takedowns at k=3 → exactly 2 purging rebases fired (cycles 3
+    // and 6: the trigger counts unpurged batches, not cycles)
+    assert(purges == 2, s"expected 2 amortized purges, got $purges")
+    // every takedown ever landed still served (folded or tail)
+    assert(readIds(idx) == dead.toSet)
+    // horizon exact
+    val alive = docs.filter(!col("doc_id").isin(dead.toSeq.map(Long.box): _*))
+    val served = IndexStore.bm25FromIndex(alive, spark, idx,
+        Retrieval.NQueries, Retrieval.QueryLen, Retrieval.K)
+      .orderBy("q_id", "rank").collect().toSeq
+    val oneShot = Retrieval.bm25TopK(alive)
+      .orderBy("q_id", "rank").collect().toSeq
+    assert(served == oneShot)
+  }
+
+  test("purgeAtBatches = 1 is today's behavior (any unpurged batch " +
+      "rebases); 0 is refused") {
+    val base = tmp("r20-amort1")
+    val store = s"$base/store"
+    val idx = s"$base/idx"
+    val docs = mkDocs(300L)
+    PostingsIngest.ingestBatch(docs, 0L, store)
+    PostingsIngest.maintain(spark, store, idx)
+    PostingsIngest.tombstoneDocs(Seq(5L).toDF("doc_id"), 1L, idx)
+    PostingsIngest.maintain(spark, store, idx) // default purgeAtBatches = 1
+    assert(graft.core.Markers.read(fs, new Path(idx, "_purged"))
+      .map(_.toLong).contains(1L),
+      "one unpurged batch must trigger the rebase at the default")
+    val e = intercept[IllegalArgumentException] {
+      PostingsIngest.maintain(spark, store, idx, purgeAtBatches = 0)
+    }
+    assert(e.getMessage.contains("purgeAtBatches"))
   }
 }

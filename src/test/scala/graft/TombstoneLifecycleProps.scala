@@ -12,7 +12,7 @@ import graft.streaming.{AnnIngest, DedupIngest}
 
 /** End-to-end takedown-lifecycle sweep for the ANN and band stores
   * (r20, VERDICT r19 #5): TombstoneStoreProps sweeps the snapshot
-  * store in isolation; the Round18Spec loops drive ONE deterministic
+  * store in isolation; the store suites' blind-timer loops drive ONE deterministic
   * ingest→tombstone→maintain schedule each. This suite randomizes that
   * loop — random batch sizes, takedowns at random cycles aimed at
   * random already-ingested victims, re-ingests of dead ids at random

@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
 import graft.streaming.TombstoneStore
 
 /** Direct crash-window coverage for the takedown snapshot store —
-  * the windows the Round18Spec maintenance loops drive only
+  * the windows the store suites' maintenance loops drive only
   * implicitly:
   *
   *   1. a crashed INSTALL (version dir present, `_covers` stamp
@@ -239,5 +239,90 @@ class TombstoneStoreSpec extends SparkSpec {
     assert(readIds(idx) == Set(1L, 7L))
     TombstoneStore.fold(spark, idx, purged = 4L, "doc_id")
     assert(readIds(idx) == Set(1L, 7L))
+  }
+
+  test("a takedown issued mid-maintenance lands without caller-side " +
+      "retry: writeGuarded polls the lease within maxWaitMs; the " +
+      "zero-budget path still refuses loudly") {
+    val idx = tmp("r20-retry") + "/idx"
+    TombstoneStore.writeGuarded(Seq(1L).toDF("doc_id"), 0L, idx)
+    val claim = new Path(idx, "_consolidate_commit")
+    // simulate a live maintenance window that closes after ~400 ms
+    graft.core.Markers.forceWrite(fs, claim, "live-fold\ntombstone-fold 9")
+    val releaser = new Thread(() => {
+      Thread.sleep(400)
+      fs.delete(claim, false)
+    })
+    releaser.start()
+    try {
+      // zero budget: one attempt, refused while the lease is held
+      val e = intercept[IllegalStateException] {
+        TombstoneStore.writeGuarded(Seq(7L).toDF("doc_id"), 1L, idx)
+      }
+      assert(e.getMessage.contains("retry once the lease clears"))
+      assert(e.getMessage.contains("delete"),
+        "the refusal must carry the dead-claimer recovery runbook")
+      // bounded budget: the SAME call shape lands once the window
+      // closes — no retry loop at the call site
+      TombstoneStore.writeGuarded(Seq(7L).toDF("doc_id"), 1L, idx,
+        maxWaitMs = 15000L)
+    } finally releaser.join()
+    assert(readIds(idx) == Set(1L, 7L))
+    // the lease was released by the write itself
+    assert(!fs.exists(claim))
+  }
+
+  test("SET-mode fold shards the snapshot above the byte threshold: " +
+      "multi-file version, reads exact, _covers discipline and the next " +
+      "fold unchanged") {
+    val idx = tmp("r20-shard") + "/idx"
+    TombstoneStore.writeGuarded(
+      spark.range(0, 500).select(col("id").as("doc_id")), 0L, idx)
+    TombstoneStore.writeGuarded(
+      spark.range(400, 900).select(col("id").as("doc_id")), 1L, idx)
+    graft.core.Markers.forceWrite(fs, new Path(idx, "_purged"), "1")
+    // tiny threshold: the two source dirs' bytes force a multi-file
+    // snapshot (the bulk-purge shape, scaled down)
+    TombstoneStore.fold(spark, idx, purged = 1L, "doc_id",
+      shardBytes = 2048L)
+    assert(TombstoneStore.coveredThrough(spark, idx) == 1L)
+    val v0 = new Path(idx, "tombstones_snapshot/v=0")
+    val parts = fs.listStatus(v0).map(_.getPath.getName)
+      .count(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts > 1, s"expected a sharded snapshot, got $parts part file(s)")
+    assert(graft.core.Markers.read(fs, new Path(v0, "_covers")).contains("1"))
+    assert(readIds(idx) == (0L until 900L).toSet)
+    // a later fold READS the sharded snapshot as its base and stays
+    // exact (single-file this time: below the default threshold)
+    TombstoneStore.writeGuarded(
+      spark.range(900, 905).select(col("id").as("doc_id")), 2L, idx)
+    graft.core.Markers.forceWrite(fs, new Path(idx, "_purged"), "2")
+    TombstoneStore.fold(spark, idx, purged = 2L, "doc_id")
+    assert(TombstoneStore.coveredThrough(spark, idx) == 2L)
+    assert(readIds(idx) == (0L until 905L).toSet)
+  }
+
+  test("ROW-mode fold shards too, preserving the correction row-set and " +
+      "batch_id column across the multi-file snapshot") {
+    val idx = tmp("r20-shardrow") + "/idx"
+    def sinkRows(lo: Long, hi: Long, b: Long): Unit =
+      graft.streaming.EventStreams.idempotentParquetSink(s"$idx/tombstones")(
+        spark.range(lo, hi).select(col("id").as("doc_id"),
+          (col("id") % 7 + 10).as("dl"), lit(0L).as("gen")), b)
+    sinkRows(0, 400, 0L)
+    sinkRows(400, 800, 1L)
+    graft.core.Markers.forceWrite(fs, new Path(idx, "_purged"), "1")
+    TombstoneStore.foldRows(spark, idx, purged = 1L, shardBytes = 2048L)
+    val v0 = new Path(idx, "tombstones_snapshot/v=0")
+    val parts = fs.listStatus(v0).map(_.getPath.getName)
+      .count(n => n.startsWith("part-") && n.endsWith(".parquet"))
+    assert(parts > 1, s"expected a sharded row snapshot, got $parts")
+    val rows = TombstoneStore.readRows(spark, idx).get
+      .select("doc_id", "dl", "gen", "batch_id")
+      .as[(Long, Long, Long, Long)].collect().toSet
+    val expected = (0L until 800L).map(i =>
+      (i, i % 7 + 10, 0L, if (i < 400) 0L else 1L)).toSet
+    assert(rows == expected,
+      "the sharded row snapshot must preserve every correction row")
   }
 }
