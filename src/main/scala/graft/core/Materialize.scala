@@ -55,6 +55,16 @@ object Materialize {
     df.queryExecution.logical
       .isInstanceOf[org.apache.spark.sql.execution.LogicalRDD]
 
+  /** Drops the blocks of every pin scanned by `df`'s plan (its
+    * checkpoint leaves) — for a frame built over its own pins, such as
+    * [[Ids.denseId]]'s result, once nothing will read it again. A
+    * reliable pin's files stay in the checkpoint dir. */
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.collectLeaves().foreach {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ =>
+    }
+
   /** [[pin]] unless the frame is already a bare pinned scan — the
     * guard that lets gate code hand an already-pinned frame to an
     * operator that pins its own input ([[graft.operators.Graph.pprInt]])

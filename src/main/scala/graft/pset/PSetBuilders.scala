@@ -9,10 +9,45 @@ import org.apache.spark.sql.types._
   * reference's per-PSet phase
   * (/root/reference/PharmacoDI/build_all_pset_tables.py:30-78).
   * Every builder is a pure `PSet => DataFrame` plan: no actions, so
-  * Catalyst fuses each chain into a small number of stages and the
-  * whole per-PSet build parallelizes trivially across PSets.
+  * Catalyst fuses each chain into a small number of stages, and
+  * [[writeAll]] runs a PSet's table writes concurrently
+  * ([[graft.core.Par.all]]) as [[Pipeline.run]] runs whole PSets.
+  * Every emitted table has the fixed schema declared in [[Schemas]].
   */
 object PSetBuilders {
+
+  /** The schema of each table [[buildAll]] emits, as a parquet read
+    * returns it (every field nullable). [[Consolidator.loadTable]]
+    * reads all PSets' copies of a table with it, so the read infers
+    * nothing from file footers. */
+  val Schemas: Map[String, StructType] = {
+    def s(fields: (String, DataType)*) =
+      StructType(fields.map { case (n, t) => StructField(n, t) })
+    def strings(names: String*) = s(names.map(_ -> StringType): _*)
+    Map(
+      "dataset" -> strings("name"),
+      "tissue" -> strings("name"),
+      "compound" -> strings("name"),
+      "compound_annotation" -> s("compound_id" -> StringType, "smiles" -> StringType,
+        "inchikey" -> StringType, "pubchem" -> StringType, "fda_status" -> BooleanType),
+      "cell" -> strings("name", "tissue_id"),
+      "gene" -> strings("name"),
+      "gene_annotation" -> s("gene_id" -> StringType, "symbol" -> StringType,
+        "gene_seq_start" -> LongType, "gene_seq_end" -> LongType),
+      "dataset_cell" -> strings("dataset_id", "cell_id"),
+      "dataset_tissue" -> strings("dataset_id", "tissue_id"),
+      "dataset_compound" -> strings("dataset_id", "compound_id"),
+      "experiment" -> strings("name", "cell_id", "compound_id", "dataset_id", "tissue_id"),
+      "dose_response" -> s("experiment_id" -> StringType, "dose" -> DoubleType,
+        "response" -> DoubleType, "dataset_id" -> StringType),
+      "profile" -> s(("experiment_id" -> StringType) +:
+        Seq("HS", "Einf", "EC50", "AAC", "IC50", "DSS1", "DSS2", "DSS3").map(_ -> DoubleType) :+
+        ("dataset_id" -> StringType): _*),
+      "mol_cell" -> s("cell_id" -> StringType, "dataset_id" -> StringType,
+        "mDataType" -> StringType, "num_prof" -> IntegerType),
+      "dataset_statistics" -> s(("dataset_id" -> StringType) +:
+        Seq("cell_lines", "tissues", "compounds", "experiments", "genes").map(_ -> LongType): _*))
+  }
 
   /** dataset (build_primary_pset_tables.py:40): one row, the PSet name. */
   def buildDataset(spark: SparkSession, psetName: String): DataFrame = {
@@ -75,12 +110,7 @@ object PSetBuilders {
         d.withColumnRenamed(from, to)
       else d
     }
-    Harmonize.harmonize(renamed, StructType(Seq(
-      StructField("compound_id", StringType),
-      StructField("smiles", StringType),
-      StructField("inchikey", StringType),
-      StructField("pubchem", StringType),
-      StructField("fda_status", BooleanType))))
+    Harmonize.harmonize(renamed, Schemas("compound_annotation"))
   }
 
   /** experiment (build_experiment_tables.py:41-75): sensitivity info
@@ -139,10 +169,8 @@ object PSetBuilders {
     }
     require(renamed.columns.contains("experiment_id"),
       "No experiment_id column in sensitivity profiles!")
-    Harmonize.harmonize(renamed, StructType(
-      StructField("experiment_id", StringType) +:
-        Seq("HS", "Einf", "EC50", "AAC", "IC50", "DSS1", "DSS2", "DSS3")
-          .map(c => StructField(c, DoubleType))))
+    Harmonize.harmonize(renamed,
+      StructType(Schemas("profile").filterNot(_.name == "dataset_id")))
       .withColumn("dataset_id", lit(psetName))
   }
 
@@ -175,17 +203,20 @@ object PSetBuilders {
   }
 
   /** dataset_statistics (build_all_pset_tables.py:139-173): one-row
-    * summary. Counts are actions but each is a cheap count job. */
+    * summary, as one lazy plan — a cross join of one-row counts, so
+    * the counts run when the table is written, beside the PSet's other
+    * writes. `genes` is 0 for a PSet without molecular profiles. */
   def buildDatasetStats(spark: SparkSession, psetName: String,
       dfs: Map[String, DataFrame]): DataFrame = {
-    import spark.implicits._
-    Seq((psetName,
-      dfs("cell").count(), dfs("tissue").count(), dfs("compound").count(),
-      dfs("experiment").count(), dfs.get("gene").map(_.count()).getOrElse(0L)))
-      .toDF("dataset_id", "cell_lines", "tissues", "compounds", "experiments", "genes")
+    def n(table: String, as: String): DataFrame =
+      dfs.get(table).fold(spark.range(1).select(lit(0L).as(as)))(_.agg(count(lit(1)).as(as)))
+    Seq(n("cell", "cell_lines"), n("tissue", "tissues"), n("compound", "compounds"),
+      n("experiment", "experiments"), n("gene", "genes"))
+      .foldLeft(buildDataset(spark, psetName).select(col("name").as("dataset_id")))(_ crossJoin _)
   }
 
-  /** Full per-PSet build (build_all_pset_tables.py:30-67). */
+  /** Full per-PSet build (build_all_pset_tables.py:30-67): plans
+    * only — it runs no Spark job; [[writeAll]] runs them. */
   def buildAll(spark: SparkSession, pset: PSet): Map[String, DataFrame] = {
     val hasMol = pset.subitems("molecularProfiles").nonEmpty
     val cell = buildCell(pset)
@@ -214,10 +245,11 @@ object PSetBuilders {
   }
 
   /** Per-PSet sink (write_pset_table.py:20-39): parquet at
-    * `{dir}/{pset}/{pset}_{table}.parquet`. */
+    * `{dir}/{pset}/{pset}_{table}.parquet`. The tables are independent
+    * plans written to disjoint paths, so they are written concurrently. */
   def writeAll(dfs: Map[String, DataFrame], psetName: String, outDir: String): Unit =
-    dfs.foreach { case (name, df) =>
+    graft.core.Par.all(dfs.toSeq.map { case (name, df) => () =>
       df.write.mode("overwrite")
         .parquet(s"$outDir/$psetName/${psetName}_$name.parquet")
-    }
+    })
 }

@@ -55,10 +55,18 @@ final case class PipelineConfig(
 
 object Pipeline {
 
-  /** Phase 1+2: per-PSet builds (parallelizable per PSet — each is an
-    * independent Spark job DAG) then cross-PSet consolidation. Returns
-    * the consolidated tables; synonym/cellosaurus phases run when
-    * their inputs are configured.
+  /** Phase 1+2: per-PSet builds, then cross-PSet consolidation.
+    * Returns the consolidated tables; synonym/cellosaurus phases run
+    * when their inputs are configured.
+    *
+    * Each PSet is an independent Spark job DAG writing its own
+    * directory, so phase 1 builds the PSets concurrently, and each
+    * PSet writes its tables concurrently; phase 2 consolidates in
+    * concurrent dependency waves ([[Consolidator.combineAll]]). At
+    * most `defaultParallelism` thunks run at once per level
+    * ([[graft.core.Par.all]]). The first failure cancels the other
+    * PSets' jobs and is rethrown as it was raised. `audit` is called
+    * on the calling thread only.
     *
     * `resumePerPset` makes phase 1 restartable at PSet granularity —
     * the unit the reference also checkpoints at (each PSet's tables
@@ -75,7 +83,7 @@ object Pipeline {
       resumePerPset: Boolean = false): Map[String, DataFrame] = {
 
     // Phase 1: per-PSet table builds (E1)
-    cfg.psetNames.foreach { name =>
+    graft.core.Par.all(cfg.psetNames.map { name => () =>
       val done = new org.apache.hadoop.fs.Path(
         s"${cfg.workDir}/$name/_graft_pset_done")
       val fs = done.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -87,7 +95,7 @@ object Pipeline {
         // tables for operator inspection
         graft.core.Markers.forceWrite(fs, done, tables.keys.toSeq.sorted.mkString("\n"))
       }
-    }
+    })
 
     // Phase 2: cross-PSet consolidation (E2)
     var tables = Consolidator.combineAll(spark, cfg.workDir, cfg.finalDir,

@@ -86,6 +86,81 @@ class PSetPipelineSpec extends SparkSpec {
     assert(molCell == Map("c1" -> 2, "c2" -> 1))
   }
 
+  /** PSetB's export without its molecularProfiles files. */
+  private lazy val noMolRoot: String = {
+    val dir = Files.createTempDirectory("minipsets-nomol")
+    val b = Files.createDirectory(dir.resolve("PSetC_PSet"))
+    Files.list(Path.of(root, "PSetB_PSet")).toArray.map(_.asInstanceOf[Path])
+      .filterNot(_.getFileName.toString.startsWith("molecularProfiles"))
+      .foreach(f => Files.copy(f, b.resolve(f.getFileName)))
+    dir.toString
+  }
+
+  test("every built table has its declared schema, with or without molecularProfiles") {
+    for ((r, name) <- Seq(root -> "PSetA", root -> "PSetB", noMolRoot -> "PSetC")) {
+      val dfs = PSetBuilders.buildAll(spark, PSetReader.read(spark, r, name))
+      val expected = PSetBuilders.Schemas.keySet --
+        (if (name == "PSetC") Set("gene", "gene_annotation", "mol_cell") else Set.empty)
+      assert(dfs.keySet == expected, name)
+      for ((t, df) <- dfs)
+        assert(org.apache.spark.sql.types.StructType(df.schema.map(_.copy(nullable = true))) ==
+          PSetBuilders.Schemas(t), s"$name $t")
+      if (name == "PSetC")
+        assert(dfs("dataset_statistics").as[(String, Long, Long, Long, Long, Long)].collect()
+          .toSeq == Seq(("PSetC", 2L, 2L, 2L, 1L, 0L)))
+    }
+  }
+
+  test("buildAll runs no Spark job") {
+    val pset = PSetReader.read(spark, root, "PSetA")
+    val (build, marker) = Seq("build", "marker").map(g => s"$g-${java.util.UUID.randomUUID()}") match {
+      case Seq(b, m) => (b, m)
+    }
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .foreach(groups.add)
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      try {
+        spark.sparkContext.setJobGroup(build, "buildAll")
+        PSetBuilders.buildAll(spark, pset)
+        // the bus delivers in order: once the marker's job is heard, any
+        // job buildAll started has been heard too
+        spark.sparkContext.setJobGroup(marker, "marker")
+        spark.range(1).count()
+      } finally spark.sparkContext.clearJobGroup()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains(marker) && System.nanoTime() < deadline) Thread.sleep(20)
+      assert(groups.contains(marker))
+      assert(!groups.contains(build))
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("combineAll releases every dense-id pin and its audit frames stay readable") {
+    consolidated // the per-PSet tables under outRoot
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val audits = scala.collection.mutable.ArrayBuffer[(String, org.apache.spark.sql.DataFrame)]()
+    val meta = Seq(("d1", "PDB1")).toDF("name", "compound_uid")
+    val out = Consolidator.combineAll(spark, outRoot,
+      Files.createTempDirectory("psetfinal-pins").toString, meta, (w, df) => audits += (w -> df))
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    assert(out("experiment").count() == 3)
+    val unmatched = audits.map { case (w, df) =>
+      w -> df.collect().map(r => String.valueOf(r.get(0))).toSet }.toMap
+    assert(unmatched.values.forall(_.isEmpty), unmatched.toString)
+    // the order a one-table-at-a-time consolidation reports them in
+    assert(audits.map(_._1).toSeq == Seq("cell.tissue", "compound_annotation.compound",
+      "dataset_cell.dataset", "dataset_cell.cell", "dataset_tissue.dataset",
+      "dataset_tissue.tissue", "dataset_compound.dataset", "dataset_compound.compound",
+      "mol_cell.cell", "mol_cell.dataset", "dataset_statistics.dataset",
+      "experiment.cell", "experiment.compound", "experiment.dataset", "experiment.tissue",
+      "dose_response.dataset", "dose_response.experiment",
+      "profile.dataset", "profile.experiment"))
+  }
+
   test("consolidation: dense ids, cross-PSet dedup, surrogate FK mapping") {
     val tissue = consolidated("tissue")
     val names = tissue.orderBy("id").select("name").as[String].collect().toSeq

@@ -1,7 +1,9 @@
 package graft
 
+import graft.core.Par
 import graft.pset._
 import java.nio.file.Files
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** End-to-end orchestrator spec: raw exports -> Pipeline.run ->
@@ -129,6 +131,76 @@ class PipelineOrchestratorSpec extends SparkSpec {
       ".rownames,aac_recomputed,ic50_recomputed,HS,einf,ec50,DSS1,DSS2,DSS3\ne1,0.5,0.3,1,0.1,0.2,1,2,3\n")
     w("molecularProfiles$rna$rowData.csv", ".features\nENSG1.2\n")
     w("molecularProfiles$rna$colData.csv", "cellid\nc1\n")
+  }
+
+  /** PSet `name` of a family whose members overlap: PSet k has cells
+    * c{k}, c{k+1}, compounds d{k}, d{k+1}, two experiments (one with a
+    * NA dose) and an experiment on an unlisted compound; genes
+    * ENSG{k}, ENSG{k+1}. `profiles` replaces the profiles export. */
+  private def writeFamilyPSet(root: String, name: String, k: Int,
+      profiles: Option[String] = None): Unit = {
+    val dir = new java.io.File(s"$root/${name}_PSet"); dir.mkdirs()
+    def w(n: String, s: String): Unit =
+      Files.writeString(java.nio.file.Paths.get(dir.getPath, n), s)
+    val (a, b) = (k, k + 1)
+    w("cell.csv", s"cellid,tissueid\nc$a,t${a % 2}\nc$b,t${b % 2}\n")
+    w("drug.csv", s"drugid,smiles,inchikey,cid,FDA\nd$a,C$a,IK$a,$a.0,true\nd$b,C$b,IK$b,$b.0,false\n")
+    w("sensitivity$info.csv",
+      s".rownames,cellid,drugid\ne${k}_1,c$a,d$a\ne${k}_2,c$b,d$b\ne${k}_x,c$a,dX\n")
+    w("sensitivity$raw.Dose.csv", s".exp_id,doses1,doses2\ne${k}_1,0.$a,0.$b\ne${k}_2,0.$b,NA\n")
+    w("sensitivity$raw.Viability.csv", s".exp_id,doses1,doses2\ne${k}_1,9$a.0,5$a.0\ne${k}_2,8$b.0,NA\n")
+    w("sensitivity$profiles.csv", profiles.getOrElse(
+      ".rownames,aac_recomputed,ic50_recomputed,HS,einf,ec50,DSS1,DSS2,DSS3\n" +
+        s"e${k}_1,0.$a,0.3,1,0.1,0.2,1,2,3\ne${k}_2,0.$b,1e60,1,0.1,0.2,4,5,6\n"))
+    w("molecularProfiles$rna$rowData.csv", s".features\nENSG$a.1\nENSG$b.2\n")
+    w("molecularProfiles$rna$colData.csv", s"cellid\nc$a\nc$a\nc$b\n")
+  }
+
+  test("concurrent PSet builds give the sequential result and the same audit calls") {
+    val root = Files.createTempDirectory("orch-par").toString
+    val names = Seq("PA", "PB", "PC")
+    names.zipWithIndex.foreach { case (n, i) => writeFamilyPSet(root, n, i + 1) }
+    val meta = Seq(("d1", "UID1"), ("d3", "UID3")).toDF("name", "compound_uid")
+    val caller = Thread.currentThread()
+    def run(): (Map[String, Seq[String]], Seq[(String, Set[String])], Boolean) = {
+      val cfg = PipelineConfig(rawDir = root,
+        workDir = Files.createTempDirectory("orch-par-work").toString,
+        finalDir = Files.createTempDirectory("orch-par-final").toString,
+        psetNames = names)
+      val calls = scala.collection.mutable.ArrayBuffer[(String, DataFrame)]()
+      var onCaller = true
+      val tables = Pipeline.run(spark, cfg, meta, (what, df) => {
+        onCaller &&= Thread.currentThread() eq caller
+        calls += (what -> df)
+      })
+      (tables.map { case (n, df) => n -> df.collect().map(_.toString).toSeq.sorted },
+        calls.toSeq.map { case (w, df) => w -> df.collect().map(r => String.valueOf(r.get(0))).toSet },
+        onCaller)
+    }
+    val (seqTables, seqAudit, _) = Par.serially(run())
+    val (parTables, parAudit, onCaller) = run()
+    assert(parTables.keySet == seqTables.keySet)
+    for (n <- seqTables.keys) assert(parTables(n) == seqTables(n), n)
+    assert(seqTables("dataset").size == 3 && seqTables("cell").size == 4)
+    assert(parAudit == seqAudit)
+    assert(onCaller, "every audit call on the calling thread")
+    assert(parAudit.collect { case (w, keys) if keys.nonEmpty => w -> keys } ==
+      Seq("experiment.compound" -> Set("dX")))
+  }
+
+  test("a PSet whose build throws fails Pipeline.run with that exception and leaves no marker") {
+    val root = Files.createTempDirectory("orch-fail").toString
+    writeFamilyPSet(root, "PA", 1)
+    writeFamilyPSet(root, "Bad", 2, profiles = Some("aac_recomputed,ic50_recomputed\n0.5,0.3\n"))
+    writeFamilyPSet(root, "PC", 3)
+    val cfg = PipelineConfig(rawDir = root,
+      workDir = Files.createTempDirectory("orch-fail-work").toString,
+      finalDir = Files.createTempDirectory("orch-fail-final").toString,
+      psetNames = Seq("PA", "Bad", "PC"))
+    val e = intercept[IllegalArgumentException](Pipeline.run(spark, cfg,
+      Seq(("d1", "UID1")).toDF("name", "compound_uid"), resumePerPset = true))
+    assert(e.getMessage.contains("No experiment_id column in sensitivity profiles"))
+    assert(!new java.io.File(s"${cfg.workDir}/Bad/_graft_pset_done").exists())
   }
 
   test("resumePerPset skips completed PSets and rebuilds after a crash (no marker)") {
