@@ -10,9 +10,20 @@ import org.apache.spark.sql.SparkSession
   * where no job was running (planning, FS listings, marker ops). The
   * gaps are what the job-count-bound lifecycle rows (bm25_maintained
   * et al.) spend on this host class; jobs are what the cluster would
-  * parallelize. `sbt "runMain graft.JobProbe x_text_bm25_maintained"`.
+  * parallelize. `compiles` and `compileMs` are the classes Spark's code
+  * generator compiled during the run and the time that took: a warm
+  * run that still compiles is re-paying codegen (the generated-class
+  * cache is smaller than the classes the run uses).
+  * `sbt "runMain graft.JobProbe x_text_bm25_maintained"`.
   */
 object JobProbe {
+
+  /** Generated classes compiled in this JVM so far, and the compile
+    * time in ms ([[org.apache.spark.metrics.source.CodegenMetrics]]
+    * counts the compiles; the code generator sums their time). */
+  private[graft] def compiled(): (Long, Double) =
+    (org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+      org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime / 1e6)
 
   private final class Probe extends SparkListener {
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, Long, String)]()
@@ -47,10 +58,12 @@ object JobProbe {
     spark.range(1000000).selectExpr("sum(id)").collect()
     probe.drain()
     for (name <- args; run <- Seq("cold", "warm")) {
+      val (c0, ms0) = compiled()
       val t0 = System.currentTimeMillis()
       SparkEntry.queries(name)(spark, sfDir)
         .write.format("noop").mode("overwrite").save()
       val t1 = System.currentTimeMillis()
+      val (c1, ms1) = compiled()
       // listener bus is async: give it a beat to drain before reading
       Thread.sleep(300)
       val jobs = probe.drain().filter { case (_, s, e, _) => e >= 0 && s >= t0 && e <= t1 + 300 }
@@ -65,7 +78,8 @@ object JobProbe {
         }
       val busy = merged.map { case (s, e) => e - s }.sum / 1e3
       println(f"PROBE $name $run wall=$wall%.2fs jobs=${jobs.size}%d " +
-        f"jobTime=${jobSecs.sum}%.2fs driverGap=${wall - busy}%.2fs")
+        f"jobTime=${jobSecs.sum}%.2fs driverGap=${wall - busy}%.2fs " +
+        f"compiles=${c1 - c0}%d compileMs=${ms1 - ms0}%.0f")
       // gap breakdown: time from each job's end to the next job's start
       val triples = jobs.sortBy(_._2)
       val gaps = (Seq((0, t0, t0, "start")) ++ triples).sliding(2).collect {
@@ -83,7 +97,8 @@ object JobProbe {
 
 /** Phase-level twin of [[JobProbe]] for the postings-store lifecycle
   * row: runs the same public API calls the maintained gate makes, one
-  * timer + job counter per phase, twice (cold + warm). */
+  * timer, job counter and compile counter per phase, twice (cold +
+  * warm). */
 object PhaseProbe {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -108,10 +123,12 @@ object PhaseProbe {
       val docs = graft.core.Tables.t(spark, sfDir, "documents")
       import spark.implicits._
       def phase[A](name: String)(body: => A): A = {
-        val j0 = jobCount.get(); val t0 = System.nanoTime()
+        val j0 = jobCount.get(); val (c0, ms0) = JobProbe.compiled(); val t0 = System.nanoTime()
         val r = body
+        val (c1, ms1) = JobProbe.compiled()
         Thread.sleep(200)
-        println(f"PHASE $round $name%-14s ${(System.nanoTime() - t0) / 1e9}%6.2fs jobs=${jobCount.get() - j0}%d")
+        println(f"PHASE $round $name%-14s ${(System.nanoTime() - t0) / 1e9}%6.2fs jobs=${jobCount.get() - j0}%d " +
+          f"compiles=${c1 - c0}%d compileMs=${ms1 - ms0}%.0f")
         r
       }
       phase("ingest")(ingestBatch(docs, 0L, s"$root/store"))

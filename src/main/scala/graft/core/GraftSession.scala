@@ -44,7 +44,30 @@ object GraftSession {
     "spark.sql.sources.useV1SourceList" -> "",
     "spark.sql.parquet.aggregatePushdown" -> "true",
     "spark.sql.session.timeZone" -> "UTC",
-    "spark.ui.enabled" -> "false")
+    "spark.ui.enabled" -> "false",
+    // Spark's JVM-wide generated-class cache (a static conf, read
+    // when the JVM generates its first class). At Spark's default of
+    // 100 it holds fewer classes than one operation uses, so LRU
+    // eviction drops each class before its next use and every warm
+    // pass recompiles about as many classes as the cold pass did.
+    // Distinct classes one operation compiles (cold, cache unbounded,
+    // stage ids out of class names as below): 218 for an etl_pipeline
+    // pass, 175 for a gate_job_bound pass, 361 for an all-phases
+    // Pipeline.run (PipelineOrchestratorSpec's inputs), 805-914 for a
+    // Bench child group (a quarter of the rows, sf0.01). The cap is
+    // over twice the largest. Metaspace used after three passes, at
+    // Spark's 100 and with every class held: 167.8 and 168.1 MB for
+    // etl_pipeline, 163.3 MB both for gate_job_bound, 168.8 and
+    // 170.2 MB for the all-phases run.
+    "spark.sql.codegen.cache.maxEntries" -> "2000",
+    // Whole-stage classes are named after their codegen stage id, and
+    // AQE numbers stages in the order it re-plans them, which varies
+    // with task timing: the same stage code under another id is a new
+    // cache key. Without the id in the name it is one class (the id
+    // stays in the plan's `*(n)` prefix).
+    "spark.sql.codegen.useIdInClassName" -> "false",
+    // fork-free permission setting for file: writes (LocalFs)
+    "spark.hadoop.fs.file.impl" -> classOf[LocalFs].getName)
 
   /** Apply the engine defaults to a builder (master/parallelism are
     * the caller's — they differ between tests, verify, and bench). */

@@ -58,11 +58,16 @@ object Materialize {
   /** Drops the blocks of every pin scanned by `df`'s plan (its
     * checkpoint leaves) — for a frame built over its own pins, such as
     * [[Ids.denseId]]'s result, once nothing will read it again. A
-    * reliable pin's files stay in the checkpoint dir. */
-  def release(df: DataFrame): Unit =
-    df.queryExecution.logical.collectLeaves().foreach {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.unpersist(blocking = false)
-      case _ =>
+    * reliable pin's files stay in the checkpoint dir. Pins also scanned
+    * by a frame in `keep` (inputs the caller still owns) stay. */
+  def release(df: DataFrame, keep: Seq[DataFrame] = Nil): Unit = {
+    val kept = keep.flatMap(pinnedRdds).map(_.id).toSet
+    pinnedRdds(df).filterNot(r => kept(r.id)).foreach(_.unpersist(blocking = false))
+  }
+
+  private def pinnedRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical.collectLeaves().collect {
+      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd
     }
 
   /** [[pin]] unless the frame is already a bare pinned scan — the

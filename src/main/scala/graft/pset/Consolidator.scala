@@ -74,15 +74,17 @@ object Consolidator {
 
   /** Sort + dense id + parquet sink (combine_pset_tables.py:334-349);
     * returns the written table ([[writeRead]]). The dense ids' pin is
-    * read by this write only, so it is released once the write ends. */
+    * read by this write only, so it is released once the write ends;
+    * pins of the frames in `keep` stay ([[Materialize.release]]). */
   def writeTable(df: DataFrame, name: String, outDir: String,
-      addIndex: Boolean = true, sortCols: Seq[Column] = Nil): DataFrame = {
+      addIndex: Boolean = true, sortCols: Seq[Column] = Nil,
+      keep: Seq[DataFrame] = Nil): DataFrame = {
     val sorted = if (sortCols.nonEmpty) df.orderBy(sortCols: _*) else df
     val path = s"$outDir/$name.parquet"
     if (!addIndex) writeRead(sorted, path)
     else {
       val indexed = Ids.denseId(sorted, sortCols)
-      try writeRead(indexed, path) finally Materialize.release(indexed)
+      try writeRead(indexed, path) finally Materialize.release(indexed, keep)
     }
   }
 
@@ -139,7 +141,7 @@ object Consolidator {
     }
     def write(name: String, df: DataFrame, addIndex: Boolean = true,
         sortCols: Seq[Column] = Nil): DataFrame =
-      writeTable(df, name, outDir, addIndex, sortCols)
+      writeTable(df, name, outDir, addIndex, sortCols, keep = Seq(compoundMeta))
     def primary(name: String, extend: DataFrame => DataFrame = identity,
         sortCol: Column = col("name")): (String, Build) =
       name -> (_ => write(name, extend(loadTable(spark, dataDir, name)), sortCols = Seq(sortCol)))

@@ -1,5 +1,6 @@
 package graft.pset
 
+import graft.core.Materialize
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Single entry point for the full PharmacoDI workload — the Spark
@@ -101,9 +102,16 @@ object Pipeline {
     var tables = Consolidator.combineAll(spark, cfg.workDir, cfg.finalDir,
       compoundMeta, audit)
 
+    // Phases 3-6 build over the caller's frames and the written tables;
+    // the dense-id pins a build takes are read by its own write only
+    // (clinical_trial's also by compound_trial's), so each write
+    // releases them, leaving any pin of the caller's frames alone
+    val inputs = compoundMeta +: cfg.productIterator.collect { case Some(df: DataFrame) => df }.toSeq
+    def writeFinal(name: String, df: DataFrame, release: Boolean = true): Unit =
+      try tables += name -> Consolidator.writeRead(df, s"${cfg.finalDir}/$name.parquet")
+      finally if (release) Materialize.release(df, keep = inputs)
+
     // Phase 3: synonyms (E3) — driven by configured curation metadata
-    def writeFinal(name: String, df: DataFrame): Unit =
-      tables += name -> Consolidator.writeRead(df, s"${cfg.finalDir}/$name.parquet")
     cfg.cellSynonymMeta.foreach { meta =>
       writeFinal("cell_synonym", SynonymBuilders.buildCellSynonyms(
         meta, tables("cell"), tables("dataset"), cfg.psetNames))
@@ -176,8 +184,10 @@ object Pipeline {
     for (studies <- cfg.clinicalStudies; syn <- tables.get("compound_synonym")) {
       val (trials, compoundTrial) =
         EnrichmentBuilders.buildClinicalTrialTables(studies, syn)
-      writeFinal("clinical_trial", trials)
-      writeFinal("compound_trial", compoundTrial)
+      try {
+        writeFinal("clinical_trial", trials, release = false)
+        writeFinal("compound_trial", compoundTrial)
+      } finally Materialize.release(trials, keep = inputs)
     }
 
     tables

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.Par
+import graft.core.{Materialize, Par}
 import graft.pset._
 import java.nio.file.Files
 import org.apache.spark.sql.DataFrame
@@ -41,6 +41,9 @@ class PipelineOrchestratorSpec extends SparkSpec {
       .withColumn("df", lit(8)).withColumn("fdr_analytic", lit(0.2))
       .withColumn("significant_permutation", lit(1)).withColumn("mDataType", lit("rna"))
 
+    val studies = Materialize.pin(Seq(("NCT1", "http://x", "Recruiting", "d1_syn"))
+      .toDF("nct", "link", "status", "compound_name"))
+    val meta = Materialize.pin(Seq(("d1", "UID1")).toDF("name", "compound_uid"))
     val cfg = PipelineConfig(
       rawDir = root,
       workDir = Files.createTempDirectory("orch-work").toString,
@@ -66,11 +69,14 @@ class PipelineOrchestratorSpec extends SparkSpec {
         .toDF("name", "compound_name", "uniprot_id")),
       uniprotToEnsembl = Some(Seq(("P001", "ENSG1"), ("P002", "ENSG1"))
         .toDF("uniprot_id", "ensembl_id")),
-      clinicalStudies = Some(Seq(("NCT1", "http://x", "Recruiting", "d1_syn"))
-        .toDF("nct", "link", "status", "compound_name")))
+      clinicalStudies = Some(studies))
 
-    val meta = Seq(("d1", "UID1")).toDF("name", "compound_uid")
+    // the caller's pinned inputs stay pinned; every dense-id pin the
+    // run takes is released
+    val before = spark.sparkContext.getPersistentRDDs.keySet
     val tables = Pipeline.run(spark, cfg, meta)
+    assert(spark.sparkContext.getPersistentRDDs.keySet == before)
+    for ((n, df) <- tables) assert(df.collect().length == df.count(), n)
 
     // golden-check: one call yields the COMPLETE table set a reference
     // user gets from build_all + combine_all + synonym/meta/target/
@@ -115,6 +121,7 @@ class PipelineOrchestratorSpec extends SparkSpec {
     // bare read of the same file
     for ((n, df) <- tables)
       assert(df.schema == spark.read.parquet(s"${cfg.finalDir}/$n.parquet").schema, n)
+    Seq(studies, meta).foreach(Materialize.release(_))
   }
 
   /** The minimal one-cell Mini PSet export under `root`. */

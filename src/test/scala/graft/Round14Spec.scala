@@ -6,8 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{IndexStore, Linkage, Similarity}
 
-/** Round 14: the V2-parquet-reader default (footer-answered aggregates
-  * always on), a plan-level pin for the IVFADC dynamic partition
+/** Round 14: a plan-level pin for the IVFADC dynamic partition
   * pruning (previously verified only by PlanCheck eyeball), the
   * build-side PQ dimension guard, and the phonetic third
   * sorted-neighborhood pass with its swap-typo blind-spot case. */
@@ -20,33 +19,6 @@ class Round14Spec extends SparkSpec {
     val d = Files.createTempDirectory(tag).toFile
     d.deleteOnExit()
     d.getAbsolutePath
-  }
-
-  // ---- V2 reader is the engine-wide default ----
-
-  test("GraftSession defaults put every entry point on the V2 reader") {
-    assert(spark.conf.get("spark.sql.sources.useV1SourceList") == "",
-      "suite session must run the V2 parquet reader")
-    assert(spark.conf.get("spark.sql.parquet.aggregatePushdown") == "true",
-      "footer aggregate pushdown must be on by default")
-  }
-
-  test("footer-answered aggregates are an ALWAYS-ON capability (no conf flip)") {
-    // the Round13Spec pin flipped session confs around the assertion;
-    // with GraftSession the DEFAULT session must plan PushedAggregation
-    val agg = spark.read.parquet(s"$dir/lineitem.parquet")
-      .agg(count(lit(1)).as("n"), min("l_orderkey").as("lo"),
-        max("l_orderkey").as("hi"))
-    assert(agg.queryExecution.executedPlan.toString
-      .contains("PushedAggregation: [COUNT(*)"),
-      "default session must push COUNT/MIN/MAX to the parquet footer scan")
-    val (n, lo, hi) = agg.as[(Long, Long, Long)].head()
-    assert(n > 0 && hi >= lo)
-    // and the GATE ROW built on this capability plans it on BOTH legs
-    val gate = SparkEntry.queries("x_profile_footer_stats")(spark, dir)
-    val plan = gate.queryExecution.executedPlan.toString
-    assert("PushedAggregation: \\[COUNT\\(\\*\\)".r.findAllIn(plan).size == 2,
-      s"both footer-stats legs must be footer-answered; got:\n$plan")
   }
 
   // ---- IVFADC dynamic partition pruning: plan-asserted ----
