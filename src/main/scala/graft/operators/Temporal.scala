@@ -225,13 +225,29 @@ object Temporal {
       .orderBy("hour", "attributed")
   }
 
+  /** Child sessions of [[eventsRangeNaive]], one per caller session.
+    * Every new session runs its tasks under its own class loader, and
+    * Spark's generated-class cache is keyed by class loader, so a
+    * session per call recompiled all of the query's classes. */
+  private val rangeSessions = new java.util.WeakHashMap[SparkSession, SparkSession]()
+
+  private def rangeRewriteSession(s0: SparkSession): SparkSession =
+    rangeSessions.synchronized {
+      rangeSessions.computeIfAbsent(s0, _ => {
+        val s = s0.newSession()
+        s.experimental.extraOptimizations = Seq(graft.plans.RangeJoinRewrite)
+        s
+      })
+    }
+
   /** Naive-form range join, exercised THROUGH the optimizer rule: the
     * query is written as the obvious inequality-only inner join — the
     * shape Spark would otherwise plan as BroadcastNestedLoopJoin — and
     * [[graft.plans.RangeJoinRewrite]] turns it into the two-bucket
     * equi-join. The rule is registered into a dedicated child session
     * (`newSession()` — shared SparkContext, isolated session state),
-    * not the caller's: mutating the caller's
+    * made once per caller session ([[rangeRewriteSession]]), not the
+    * caller's: mutating the caller's
     * `experimental.extraOptimizations` would leak the rule into every
     * subsequent query on that session, and the contains/append is a
     * non-atomic check-then-act under concurrent submission. A
@@ -241,8 +257,7 @@ object Temporal {
     * correctly decline. Semantics: clicks across ALL users in the
     * hour before each purchase (global temporal click density). */
   val eventsRangeNaive: Q = (s0, dir) => {
-    val s = s0.newSession()
-    s.experimental.extraOptimizations = Seq(graft.plans.RangeJoinRewrite)
+    val s = rangeRewriteSession(s0)
     val e = t(s, dir, "events")
       .select(col("user_id"), col("event_id"), col("event_type"), tsSec.as("sec"))
     val clicks = e.filter(col("event_type") === "click").select(col("sec").as("c_sec"))

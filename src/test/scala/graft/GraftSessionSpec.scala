@@ -5,9 +5,11 @@ import java.nio.file.{Files, Path => JPath}
 import java.nio.file.attribute.PosixFilePermissions
 
 import scala.jdk.CollectionConverters._
+import scala.reflect.io.Directory
 
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 import graft.core.LocalFs
 
@@ -15,7 +17,7 @@ import graft.core.LocalFs
   * every entry point and the suite share: the V2 parquet reader, a
   * generated-class cache that holds the engine's plan traffic, and the
   * fork-free `file:` filesystem ([[LocalFs]]). */
-class GraftSessionSpec extends SparkSpec {
+class GraftSessionSpec extends SparkSpec with BeforeAndAfterAll {
   import spark.implicits._
 
   private val dir = "/root/testdata/sf0.001"
@@ -66,9 +68,14 @@ class GraftSessionSpec extends SparkSpec {
 
   // ---- fork-free file: filesystem ----
 
+  private val dirs = scala.collection.mutable.Buffer.empty[JPath]
+
+  override def afterAll(): Unit =
+    try dirs.foreach(d => new Directory(d.toFile).deleteRecursively()) finally super.afterAll()
+
   private def tmp(tag: String): JPath = {
     val d = Files.createTempDirectory(tag)
-    d.toFile.deleteOnExit()
+    dirs += d
     d
   }
 

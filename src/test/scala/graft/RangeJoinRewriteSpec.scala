@@ -74,6 +74,21 @@ class RangeJoinRewriteSpec extends SparkSpec {
     assert(actual.sameElements(expected) && expected.nonEmpty)
   }
 
+  test("x_events_range_naive reuses its child session: a second call compiles nothing") {
+    // a new child session per call ran its tasks under a new class
+    // loader, which misses Spark's generated-class cache every time
+    val s = spark.newSession()
+    def run(): Long = {
+      val (c0, _) = JobProbe.compiled()
+      graft.operators.Temporal.eventsRangeNaive(s, "/root/testdata/sf0.001").collect()
+      JobProbe.compiled()._1 - c0
+    }
+    val first = run()
+    assert(first > 0, "the first call on a new caller session compiles its classes")
+    val second = run()
+    assert(second == 0, s"the second call must hit the cache; it compiled $second classes")
+  }
+
   test("joins that already have a cross-side equality are left alone") {
     val opt = spark.newSession()
     opt.experimental.extraOptimizations = Seq(RangeJoinRewrite)
